@@ -2562,8 +2562,12 @@ def _aggs_tree(
                 # safety argument). ES restricts these to histogram-
                 # family parents; the key ordering generalizes.
                 ser_keys = [c["name"] for c in chain[: depth + 1]]
-                w = Window.partitionBy(*keys).orderBy(
-                    *[F.col(c).asc() for c in ser_keys[len(keys):]]
+                # the canonical ES spelling (`_count` or a metric of the
+                # owner itself) makes the owner's own buckets the series:
+                # partition by the levels above it, order by its key
+                part = keys if len(ser_keys) > len(keys) else keys[:-1]
+                w = Window.partitionBy(*part).orderBy(
+                    *[F.col(c).asc() for c in ser_keys[len(part):]]
                 )
                 if pkind == "cumulative_sum":
                     val = F.sum(tcol).over(

@@ -16,11 +16,15 @@ reference's `size` cap becoming top-k `k` (SURVEY.md §2.3 F1-F4).
 
 from __future__ import annotations
 
+import functools
 import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from elasticsearch_assets_spark.analysis.tokenizer import tokenize
 from elasticsearch_assets_spark.index.stats import IndexMeta, load_meta
@@ -92,49 +96,88 @@ def _span_expr_eval(expr, postings):
 TOPK_SCHEMA = "doc_id long, score double"
 MSEARCH_SCHEMA = "query_id int, doc_id long, score double"
 
+# Σ df over a query's fetched terms below which search() scores on the
+# driver (one pushed `term IN` collect, the same segment kernels in
+# process) instead of through the applyInPandas plan. Small queries pay
+# the plan's fixed cost — exchange, Python worker, global top-k — many
+# times over their kernel time; the crossover measured at 10^5 and 10^6
+# postings is recorded in docs/PLANS.md.
+DRIVER_POSTINGS_MAX = 1_000_000
 
-def _score_segment(
-    pdf: pd.DataFrame,
-    terms: list[str],
-    idfs: dict[str, float],
-    avgdl: float,
-    k1: float,
-    b: float,
-    mode: str,
-    k: int | None,
-    excluded: np.ndarray | None = None,
-    allowed: np.ndarray | None = None,
-    after: tuple[float, int] | None = None,
-    groups: list[list[str]] | None = None,
-    min_should_match: int | None = None,
-    not_terms: list[str] | None = None,
-) -> pd.DataFrame:
-    """Score one segment's posting lists for the query. `terms` is sorted.
 
-    AND: docID-intersection first, tf/dl block-decoded only for survivors.
-    OR + k: block-max pruned candidate selection (wand.py), rank-safe.
-    OR all: exhaustive union scoring.
-    `excluded` (tombstones) are dropped and, when `allowed` is given,
-    ranking is restricted to that doc set — both before the top-k cut.
-    In every path the exact scorer accumulates terms in sorted order —
-    results are independent of pruning and of segment count.
+@functools.lru_cache(maxsize=None)
+def _ddl_struct(ddl: str) -> StructType:
+    return StructType.fromDDL(ddl)
 
-    `after` = (score, doc_id) keyset cursor: only docs STRICTLY after that
-    rank position (score DESC, doc_id ASC order) are returned — the ES
-    search_after contract, applied per segment BEFORE the top-k cut (so k
-    per segment still suffices for any page depth, the reason ES's
-    search_after beats from+size at scale). With `after` the kernel scores
-    matching docs exhaustively — the block-max pruning θ-bound would need
-    cursor-filtered seeds; exhaustive keeps it rank-safe.
-    """
-    postings = {
-        row["term"]: TermPostings(row)
-        for row in (t._asdict() for t in pdf.itertuples(index=False))
-    }
-    return _score_postings(
-        postings, terms, idfs, avgdl, k1, b, mode, k, excluded, allowed,
-        after, groups, min_should_match, not_terms,
+
+def local_frame(
+    spark: SparkSession, schema: str, columns: "dict | None" = None
+) -> DataFrame:
+    """A driver-side result as a DataFrame built from a pyarrow.Table.
+
+    It plans as LocalTableScan, so collect() runs no Spark job; a Python
+    list would go through parallelize and cost one job per frame.
+    `columns` maps every field of the DDL `schema` to a sequence of
+    values; None gives the empty frame."""
+    struct = _ddl_struct(schema)
+    arrow_schema = to_arrow_schema(struct)
+    table = (
+        arrow_schema.empty_table() if columns is None
+        else pa.table(columns, schema=arrow_schema)
     )
+    return spark.createDataFrame(table, struct)
+
+
+def hits_frame(spark: SparkSession, hits: "list[tuple[int, float]]") -> DataFrame:
+    """[(doc_id, score)] hits as a job-free TOPK_SCHEMA local frame."""
+    return local_frame(
+        spark, TOPK_SCHEMA,
+        {"doc_id": [d for d, _ in hits], "score": [s for _, s in hits]},
+    )
+
+
+def _query_terms(query: "str | list[str] | None") -> list[str]:
+    """Sorted distinct terms of a raw text (index analyzer) or term list."""
+    return sorted(set(tokenize(query) if isinstance(query, str) else query or []))
+
+
+def _postings_of(rows) -> dict:
+    """{term: TermPostings} of one segment's rows (pandas tuples or Rows)."""
+    return {r["term"]: TermPostings(r) for r in rows}
+
+
+def _segment_rows(pdf: pd.DataFrame):
+    """One segment's rows of an applyInPandas group, as dicts."""
+    return (t._asdict() for t in pdf.itertuples(index=False))
+
+
+def _scan_filter_rows(plan) -> int:
+    """numOutputRows of the deepest Filter in an executed JVM plan — the
+    `term IN` filter over the segment scan, i.e. the posting rows the
+    scan fed to the kernels. Descends through AQE's final plan and its
+    query stages."""
+    rows, stack = 0, [plan]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStage"):
+            stack.append(node.plan())
+            continue
+        if name == "Filter":
+            rows = node.metrics().apply("numOutputRows").value()
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return rows
+
+
+def _global_topk(per_seg: DataFrame, k: int | None) -> DataFrame:
+    """The distributed merge of per-segment candidates: (score DESC,
+    doc_id ASC), cut at k (TakeOrderedAndProject)."""
+    ordered = per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+    return ordered.limit(k) if k is not None else ordered
 
 
 def _merge_not_excluded(
@@ -173,10 +216,26 @@ def _score_postings(
     min_should_match: int | None = None,
     not_terms: list[str] | None = None,
 ) -> pd.DataFrame:
-    """`_score_segment`'s kernel over a prebuilt {term: TermPostings} dict —
-    factored out so `msearch` can decode one segment's postings ONCE and run
-    every query's kernel against the same dict (same code path = the
-    rank-identity invariant holds per query by construction)."""
+    """Score one segment's postings ({term: TermPostings}) for the query.
+    `terms` is sorted. Every placement runs it: the driver, applyInPandas,
+    and msearch, which decodes a segment once for all its queries.
+
+    AND: docID-intersection first, tf/dl block-decoded only for survivors.
+    OR + k: block-max pruned candidate selection (wand.py), rank-safe.
+    OR all: exhaustive union scoring.
+    `excluded` (tombstones) are dropped and, when `allowed` is given,
+    ranking is restricted to that doc set — both before the top-k cut.
+    In every path the exact scorer accumulates terms in sorted order —
+    results are independent of pruning and of segment count.
+
+    `after` = (score, doc_id) keyset cursor: only docs STRICTLY after that
+    rank position (score DESC, doc_id ASC order) are returned — the ES
+    search_after contract, applied per segment BEFORE the top-k cut (so k
+    per segment still suffices for any page depth, the reason ES's
+    search_after beats from+size at scale). With `after` the kernel scores
+    matching docs exhaustively — the block-max pruning θ-bound would need
+    cursor-filtered seeds; exhaustive keeps it rank-safe.
+    """
     from elasticsearch_assets_spark.query.wand import restrict
 
     if not_terms:
@@ -252,6 +311,69 @@ def _score_postings(
     return pd.DataFrame({"doc_id": docs, "score": score})
 
 
+def _score_optional_should(
+    postings: dict,
+    must_groups: list[list[str]],
+    clauses: list[tuple[list[str], float]],
+    idfs: dict[str, float],
+    avgdl: float,
+    k1: float,
+    b: float,
+    k: int | None,
+    excluded: np.ndarray | None,
+    allowed: np.ndarray | None,
+    min_should_match: int,
+    not_terms: list[str] | None = None,
+) -> pd.DataFrame:
+    """The bool must + optional-should kernel over one segment's postings
+    (`search_optional_should`'s per-segment scorer)."""
+    if not_terms:
+        excluded = _merge_not_excluded(postings, not_terms, excluded)
+    docs, score = topk_optional_should(
+        must_groups, clauses, postings, idfs, avgdl, k1, b, k, excluded,
+        allowed, min_should_match,
+    )
+    return pd.DataFrame({"doc_id": docs, "score": score})
+
+
+def _score_near(
+    postings, t1, t2, slop, ordered, distinct, idfs, avgdl, k1, b, k,
+    excluded, allowed,
+) -> pd.DataFrame:
+    """`search_near`'s per-segment kernel: proximity match, then the
+    exact BM25 of the two terms, top-k."""
+    from elasticsearch_assets_spark.query.phrase import near_match
+    from elasticsearch_assets_spark.query.wand import restrict
+
+    docs = restrict(near_match(postings, t1, t2, slop, ordered), excluded, allowed)
+    score = exact_scores(docs, distinct, postings, idfs, avgdl, k1, b)
+    order = np.lexsort((docs, -score))[:k]
+    return pd.DataFrame({"doc_id": docs[order], "score": score[order]})
+
+
+def _score_phrase(
+    postings, toks, distinct, kept, idfs, avgdl, k1, b, k, excluded, allowed,
+) -> pd.DataFrame:
+    """`search_phrase`'s per-segment kernel: positional phrase match, then
+    the phrase terms' BM25 (plus the `kept` clause groups', ANDed)."""
+    from elasticsearch_assets_spark.query.phrase import phrase_match
+    from elasticsearch_assets_spark.query.wand import (
+        restrict,
+        topk_group_conjunctive,
+    )
+
+    docs = restrict(phrase_match(postings, toks), excluded, allowed)
+    if kept is not None:
+        docs, score = topk_group_conjunctive(
+            [[t] for t in distinct] + kept, postings, idfs, avgdl, k1, b, k,
+            allowed=docs,
+        )
+        return pd.DataFrame({"doc_id": docs, "score": score})
+    score = exact_scores(docs, distinct, postings, idfs, avgdl, k1, b)
+    order = np.lexsort((docs, -score))[:k]
+    return pd.DataFrame({"doc_id": docs[order], "score": score[order]})
+
+
 class InvertedIndex:
     """Handle to a built index directory (segments + stats + meta).
 
@@ -260,6 +382,9 @@ class InvertedIndex:
     costing a Spark job each (a web-corpus vocabulary is millions of terms =
     tens of MB, fine; set 0 to force per-query distributed lookups, the
     10^12-doc / 10^8-term path where stats stay a bucketed table)."""
+
+    # profile()'s placement record while it runs a search, else None
+    _trace: dict | None = None
 
     def __init__(
         self, spark: SparkSession, index_dir: str, driver_stats_rows: int = 5_000_000
@@ -435,6 +560,17 @@ class InvertedIndex:
         when k is None). `allowed` restricts ranking to a doc-id set (the
         reference's `range AND (query)` composition — see search_filtered).
 
+        Placement: the query's estimated postings (Σ df over the fetched
+        terms, must_not terms included, from the term_stats taken here)
+        choose where the segment kernels run. Below DRIVER_POSTINGS_MAX
+        the pushed `term IN` scan is collected and scored on the driver,
+        and the result is a local frame (LocalTableScan: its collect()
+        runs no Spark job). Above it the result is the lazy applyInPandas
+        plan (per-segment kernels, then TakeOrdered). Both give identical
+        rows (tested). A driver-placed search runs its scan when called,
+        not when the frame is collected — the same call-time snapshot
+        every search takes of term_stats, the idfs and the tombstones.
+
         `after` = (score, doc_id) of the previous page's last row — keyset
         pagination (ES search_after, the reference's scroll-style paging
         surface, /root/reference/asset/elasticsearch_reader/reader.js). The
@@ -467,49 +603,118 @@ class InvertedIndex:
         cut (a plain Filter over ≤ segments × k rows; score filtering
         can't prune postings because BM25 scores aren't known until
         scored, same as ES)."""
+        q = self._compile_search(
+            query, k, mode, allowed, after, groups, min_should_match, boosts,
+            must_not,
+        )
+        if q is None:
+            return local_frame(self.spark, TOPK_SCHEMA)
+        return self._score_segments(*q, k, min_score)
+
+    def _compile_search(
+        self, query, k, mode, allowed, after, groups, min_should_match,
+        boosts, must_not,
+    ):
+        """`search`'s driver-side compile: (fetch terms, their term_stats,
+        the per-segment kernel), or None when no doc can match."""
         if min_should_match is not None and (mode != "or" or groups is not None):
             raise ValueError("min_should_match applies to mode='or' flat queries")
         if groups is not None:
             terms = sorted({t for g in groups for t in g})
         else:
-            terms = sorted(set(tokenize(query) if isinstance(query, str) else query))
+            terms = _query_terms(query)
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        not_terms = sorted(
-            set(tokenize(must_not) if isinstance(must_not, str) else must_not or [])
-        )
-        dfs = self.term_stats(terms)
+            return None
+        not_terms = _query_terms(must_not)
+        fetch = sorted(set(terms) | set(not_terms))
+        dfs = self.term_stats(fetch)
         if mode == "and":
             if groups is not None:
                 if any(all(t not in dfs for t in g) for g in groups):
-                    return self.spark.createDataFrame([], TOPK_SCHEMA)
-            elif len(dfs) != len(terms):
-                return self.spark.createDataFrame([], TOPK_SCHEMA)
+                    return None
+            elif any(t not in dfs for t in terms):
+                return None
         meta = self.meta
         idfs = {
             t: idf(meta.n_docs, dfs.get(t, 0)) * (boosts or {}).get(t, 1.0)
             for t in terms
         }
-        avgdl, k1, b = meta.avgdl, meta.k1, meta.b
-        excluded = self.tombstones
-        msm = min_should_match
-
-        def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _score_segment(
-                pdf, terms, idfs, avgdl, k1, b, mode, k, excluded, allowed,
-                after, groups, msm, not_terms,
-            )
-
-        fetch = sorted(set(terms) | set(not_terms))
-        per_seg = (
-            self.segments.where(F.col("term").isin(fetch))
-            .groupBy("seg_id")
-            .applyInPandas(score_fn, TOPK_SCHEMA)
+        kernel = functools.partial(
+            _score_postings, terms=terms, idfs=idfs, avgdl=meta.avgdl,
+            k1=meta.k1, b=meta.b, mode=mode, k=k, excluded=self.tombstones,
+            allowed=allowed, after=after, groups=groups,
+            min_should_match=min_should_match, not_terms=not_terms,
         )
+        return fetch, dfs, kernel
+
+    def _score_segments(
+        self,
+        fetch: list[str],
+        dfs: dict[str, int],
+        kernel,
+        k: int | None,
+        min_score: float | None = None,
+    ) -> DataFrame:
+        """Run a per-segment kernel ({term: TermPostings} -> (doc_id,
+        score) frame) over the segment rows of `fetch`, then the global
+        (score DESC, doc_id ASC) top-k, placed by the estimated postings
+        Σ df over `fetch` (see `search`)."""
+        estimate = sum(dfs.get(t, 0) for t in fetch)
+        trace = self._trace
+        if trace is not None:
+            trace["postings_estimate"] = estimate
+        if estimate < DRIVER_POSTINGS_MAX:
+            docs, scores, n_rows = self._driver_topk(fetch, kernel, k, min_score)
+            if trace is not None:
+                trace.update(backend="driver", postings_rows=n_rows)
+            return local_frame(
+                self.spark, TOPK_SCHEMA, {"doc_id": docs, "score": scores}
+            )
+        if trace is not None:
+            trace["backend"] = "distributed"
+        per_seg = self._per_segment(fetch, kernel)
         if min_score is not None:
             per_seg = per_seg.where(F.col("score") >= float(min_score))
-        ordered = per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return ordered.limit(k) if k is not None else ordered
+        return _global_topk(per_seg, k)
+
+    def _driver_topk(
+        self, fetch: list[str], kernel, k: int | None,
+        min_score: float | None = None,
+    ) -> tuple[np.ndarray, np.ndarray, int]:
+        """The driver placement of a per-segment kernel: one pushed
+        `term IN` collect, the kernel per segment, then the global
+        (score DESC, doc_id ASC) order and the k cut — the rows of the
+        distributed plan's orderBy(...).limit(k). Returns (doc ids,
+        scores, posting rows scanned)."""
+        by_seg: dict[int, list] = {}
+        rows = self.segments.where(F.col("term").isin(fetch)).collect()
+        for r in rows:
+            by_seg.setdefault(r["seg_id"], []).append(r)
+        outs = [kernel(_postings_of(seg)) for seg in by_seg.values()]
+        docs = np.concatenate(
+            [o["doc_id"].to_numpy(np.int64) for o in outs]
+            or [np.array([], dtype=np.int64)]
+        )
+        scores = np.concatenate(
+            [o["score"].to_numpy(np.float64) for o in outs]
+            or [np.array([], dtype=np.float64)]
+        )
+        if min_score is not None:
+            keep = scores >= float(min_score)
+            docs, scores = docs[keep], scores[keep]
+        order = np.lexsort((docs, -scores))[:k]
+        return docs[order], scores[order], len(rows)
+
+    def _per_segment(self, fetch: list[str], kernel) -> DataFrame:
+        """The distributed placement of a per-segment kernel: the pushed
+        `term IN` scan, grouped by seg_id into applyInPandas."""
+        return (
+            self.segments.where(F.col("term").isin(fetch))
+            .groupBy("seg_id")
+            .applyInPandas(
+                lambda pdf: kernel(_postings_of(_segment_rows(pdf))), TOPK_SCHEMA
+            )
+        )
 
     def search_optional_should(
         self,
@@ -540,14 +745,24 @@ class InvertedIndex:
         postings; should postings never widen the candidate set — per
         segment they cost one gather over the must survivors. Doc-bucketed
         segments make the per-segment clause-match count global, so
-        segment-local top-k + global merge keeps the rank identity."""
+        segment-local top-k + global merge keeps the rank identity.
+        Placed on the driver or distributed like `search`, with the same
+        call-time scan for a driver-placed query."""
+        q = self._compile_optional_should(
+            must, should, k, minimum_should_match, must_not, groups, allowed
+        )
+        if q is None:
+            return local_frame(self.spark, TOPK_SCHEMA)
+        return self._score_segments(*q, k)
+
+    def _compile_optional_should(
+        self, must, should, k, minimum_should_match, must_not, groups, allowed
+    ):
+        """`search_optional_should`'s compile, shaped like `_compile_search`."""
         if groups is not None:
             must_groups = [sorted(set(g)) for g in groups]
         else:
-            must_terms = sorted(
-                set(tokenize(must) if isinstance(must, str) else must)
-            )
-            must_groups = [[t] for t in must_terms]
+            must_groups = [[t] for t in _query_terms(must)]
         if not must_groups:
             raise ValueError(
                 "search_optional_should needs must terms; a should-only "
@@ -558,47 +773,29 @@ class InvertedIndex:
             w = 1.0
             if isinstance(c, tuple):
                 c, w = c
-            terms_c = sorted(set(tokenize(c) if isinstance(c, str) else c))
+            terms_c = _query_terms(c)
             if terms_c:
                 clauses.append((terms_c, float(w)))
         if minimum_should_match > len(clauses):
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return None
         all_terms = sorted(
             {t for g in must_groups for t in g}
             | {t for ts, _ in clauses for t in ts}
         )
-        not_terms = sorted(
-            set(tokenize(must_not) if isinstance(must_not, str) else must_not or [])
-        )
-        dfs = self.term_stats(all_terms)
-        if any(all(t not in dfs for t in g) for g in must_groups):
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        meta = self.meta
-        idfs = {t: idf(meta.n_docs, dfs.get(t, 0)) for t in all_terms}
-        avgdl, k1, b = meta.avgdl, meta.k1, meta.b
-        excluded = self.tombstones
-        msm = minimum_should_match
-
-        def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = {
-                row["term"]: TermPostings(row)
-                for row in (t._asdict() for t in pdf.itertuples(index=False))
-            }
-            excl = _merge_not_excluded(postings, not_terms, excluded)
-            docs, score = topk_optional_should(
-                must_groups, clauses, postings, idfs, avgdl, k1, b, k,
-                excl, allowed, msm,
-            )
-            return pd.DataFrame({"doc_id": docs, "score": score})
-
+        not_terms = _query_terms(must_not)
         fetch = sorted(set(all_terms) | set(not_terms))
-        per_seg = (
-            self.segments.where(F.col("term").isin(fetch))
-            .groupBy("seg_id")
-            .applyInPandas(score_fn, TOPK_SCHEMA)
+        dfs = self.term_stats(fetch)
+        if any(all(t not in dfs for t in g) for g in must_groups):
+            return None
+        meta = self.meta
+        kernel = functools.partial(
+            _score_optional_should, must_groups=must_groups, clauses=clauses,
+            idfs={t: idf(meta.n_docs, dfs.get(t, 0)) for t in all_terms},
+            avgdl=meta.avgdl, k1=meta.k1, b=meta.b, k=k,
+            excluded=self.tombstones, allowed=allowed,
+            min_should_match=minimum_should_match, not_terms=not_terms,
         )
-        ordered = per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return ordered.limit(k) if k is not None else ordered
+        return fetch, dfs, kernel
 
     def search_local(
         self,
@@ -614,124 +811,44 @@ class InvertedIndex:
         opt_should: "list[tuple[list[str], float]] | None" = None,
         opt_msm: int = 0,
     ) -> list[tuple[int, float]]:
-        """Low-latency serving path: ONE Spark job (the pushed-down `term IN`
-        scan collects the few matching posting rows), then the same scoring
-        kernels run on the driver — the coordinating-node pattern. Returns
-        [(doc_id, score)] identical to `search().collect()` (tested).
-        `allowed` restricts ranking to a sorted doc-id set — the serving
-        form of the reference's `range AND (query)` composition, identical
-        to `search_filtered` (tested). `after` is the keyset cursor, same
-        contract as `search` (tested identical).
+        """`search`'s driver placement at any query size, returned as
+        [(doc_id, score)] identical to `search().collect()` (tested): one
+        pushed `term IN` scan collects the query's posting rows, then the
+        same segment kernels run on the driver — the coordinating-node
+        pattern. Like a driver-placed `search`, the scan runs when called.
 
-        Right when the query's posting lists are driver-small (typical
-        serving); `search()` remains the distributed path for huge head
-        terms or k=None analytics. `min_should_match` / `boosts` carry the
-        same contracts as `search` (tested identical). `opt_should` /
-        `opt_msm` = the serving twin of `search_optional_should` (same
-        kernel, tested rank-identical)."""
-        if min_should_match is not None and (mode != "or" or groups is not None):
-            raise ValueError("min_should_match applies to mode='or' flat queries")
-        if opt_should is not None and (
-            min_should_match is not None or boosts or mode != "and"
-            or after is not None
-        ):
-            raise ValueError(
-                "opt_should composes with must semantics (mode='and', "
-                "clause weights carry the boosts, opt_msm counts clauses)"
-            )
-        if groups is not None:
-            terms = sorted({t for g in groups for t in g})
-        else:
-            terms = sorted(set(tokenize(query) if isinstance(query, str) else query))
-        if not terms:
-            return []
-        clauses: list[tuple[list[str], float]] = [
-            (sorted(set(ts)), float(w)) for ts, w in (opt_should or [])
-            if ts
-        ]
-        must_groups = (
-            None if opt_should is None
-            else ([sorted(set(g)) for g in groups] if groups is not None
-                  else [[t] for t in terms])
-        )
-        opt_terms = sorted(
-            {t for ts, _ in clauses for t in ts} - set(terms)
-        )
-        not_terms = sorted(
-            set(tokenize(must_not) if isinstance(must_not, str) else must_not or [])
-        )
-        fetch = sorted(set(terms) | set(not_terms) | set(opt_terms))
-        rows = self.segments.where(F.col("term").isin(fetch)).collect()
-        dfs: dict[str, int] = {}
-        by_seg: dict[int, dict[str, object]] = {}
-        for r in rows:
-            dfs[r["term"]] = dfs.get(r["term"], 0) + r["df"]
-            by_seg.setdefault(r["seg_id"], {})[r["term"]] = TermPostings(r)
-        if mode == "and":
-            if groups is not None:
-                if any(all(t not in dfs for t in g) for g in groups):
-                    return []
-            elif any(t not in dfs for t in terms):
+        `allowed`, `after`, `groups`, `min_should_match`, `boosts` and
+        `must_not` carry the contracts of `search`. `opt_should` /
+        `opt_msm` = `search_optional_should` with `query` / `groups` as
+        the must side (same kernel, tested rank-identical)."""
+        if opt_should is not None:
+            if (
+                min_should_match is not None or boosts or mode != "and"
+                or after is not None
+            ):
+                raise ValueError(
+                    "opt_should composes with must semantics (mode='and', "
+                    "clause weights carry the boosts, opt_msm counts clauses)"
+                )
+            if not (groups if groups is not None else _query_terms(query)):
                 return []
-        meta = self.meta
-        idfs = {
-            t: idf(meta.n_docs, dfs.get(t, 0)) * (boosts or {}).get(t, 1.0)
-            for t in sorted(set(terms) | set(opt_terms))
-        }
-        out_docs: list[np.ndarray] = []
-        out_scores: list[np.ndarray] = []
-        from elasticsearch_assets_spark.query.wand import restrict
-
-        seg_k = None if after is not None else k  # cursor filters pre-cut
-        for postings in by_seg.values():
-            excl = self.tombstones
-            if not_terms:  # same per-segment exclusion as _score_segment
-                excl = _merge_not_excluded(postings, not_terms, excl)
-            if opt_should is not None:
-                d, s = topk_optional_should(
-                    must_groups, clauses, postings, idfs, meta.avgdl,
-                    meta.k1, meta.b, seg_k, excl, allowed, opt_msm,
-                )
-            elif mode == "and" and groups is not None:
-                d, s = topk_group_conjunctive(
-                    groups, postings, idfs, meta.avgdl, meta.k1, meta.b, seg_k,
-                    excl, allowed,
-                )
-            elif mode == "and":
-                d, s = topk_conjunctive(
-                    terms, postings, idfs, meta.avgdl, meta.k1, meta.b, seg_k,
-                    excl, allowed,
-                )
-            elif min_should_match is not None:
-                d, s = topk_min_should_match(
-                    terms, min_should_match, postings, idfs, meta.avgdl,
-                    meta.k1, meta.b, seg_k, excl, allowed,
-                )
-            elif seg_k is not None:
-                d, s = topk_disjunctive_pruned(
-                    terms, postings, idfs, meta.avgdl, meta.k1, meta.b, seg_k,
-                    excl, allowed,
-                )
-            else:
-                present = [t for t in terms if t in postings]
-                d = np.unique(np.concatenate([postings[t].doc_ids for t in present])) \
-                    if present else np.array([], dtype=np.int64)
-                d = restrict(d, excl, allowed)
-                s = exact_scores(d, terms, postings, idfs, meta.avgdl, meta.k1, meta.b)
-            if after is not None and d.size:
-                s_a, d_a = after
-                keep = (s < s_a) | ((s == s_a) & (d > d_a))
-                d, s = d[keep], s[keep]
-            out_docs.append(d)
-            out_scores.append(s)
-        if not out_docs:
+            q = self._compile_optional_should(
+                query, opt_should, k, opt_msm, must_not, groups, allowed
+            )
+        else:
+            q = self._compile_search(
+                query, k, mode, allowed, after, groups, min_should_match,
+                boosts, must_not,
+            )
+        if q is None:
             return []
-        docs = np.concatenate(out_docs)
-        scores = np.concatenate(out_scores)
-        order = np.lexsort((docs, -scores))
-        if k is not None:
-            order = order[:k]
-        return [(int(docs[i]), float(scores[i])) for i in order]
+        fetch, _, kernel = q
+        return self._driver_hits(fetch, kernel, k)
+
+    def _driver_hits(self, fetch, kernel, k) -> list[tuple[int, float]]:
+        """`_driver_topk` as [(doc_id, score)] (the serving twins' result)."""
+        docs, scores, _ = self._driver_topk(fetch, kernel, k)
+        return list(zip(docs.tolist(), scores.tolist()))
 
     # -- multi-term rewrites (prefix / wildcard / fuzzy) --------------------
 
@@ -790,7 +907,7 @@ class InvertedIndex:
         see query/expand.py for the contract and the ES deviation note)."""
         terms = self.expand_prefix(prefix, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         return self.search(terms, k=k, mode="or")
 
     # -- search-as-you-type prefix acceleration (round-3 verdict item #4) ----
@@ -912,7 +1029,7 @@ class InvertedIndex:
         keeps the two-plan reference path."""
         toks = tokenize(text)
         if not toks:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         s, lo, hi = self._sayt_handle()
         last = toks[-1]
         if not (lo <= len(last) <= hi):
@@ -965,10 +1082,7 @@ class InvertedIndex:
 
         def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
             src = int(pdf["_src"].iloc[0])
-            postings = {
-                row["term"]: TermPostings(row)
-                for row in (t._asdict() for t in pdf.itertuples(index=False))
-            }
+            postings = _postings_of(_segment_rows(pdf))
             if src == 0:
                 return _score_postings(
                     postings, rest, idfs_m, avgdl_m, k1_m, b_m, "or",
@@ -998,7 +1112,7 @@ class InvertedIndex:
         terms; leading literal prefix is parquet-pushed, then a scored OR."""
         terms = self.expand_wildcard(pattern, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         return self.search(terms, k=k, mode="or")
 
     def expand_wildcard_trigram(
@@ -1040,7 +1154,7 @@ class InvertedIndex:
         dictionary at 10^12-doc vocab sizes."""
         terms = self.expand_wildcard_trigram(pattern, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         return self.search(terms, k=k, mode="or")
 
     def search_fuzzy(
@@ -1062,7 +1176,7 @@ class InvertedIndex:
             term, max_edits, prefix_length, max_expansions, transpositions
         )
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         return self.search(terms, k=k, mode="or")
 
     def expand_regexp(self, pattern: str, max_expansions: int | None = None) -> list[str]:
@@ -1081,7 +1195,7 @@ class InvertedIndex:
         The literal prefix (if any) is parquet-pushed (query/expand.py)."""
         terms = self.expand_regexp(pattern, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         return self.search(terms, k=k, mode="or")
 
     # -- rescoring ------------------------------------------------------------
@@ -1118,7 +1232,7 @@ class InvertedIndex:
         primary = self.search(query, k=window_size, mode=mode)
         ids = [r["doc_id"] for r in primary.select("doc_id").collect()]
         if not ids:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         allowed = np.sort(np.array(ids, dtype=np.int64))
         secondary = self.search(
             rescore_query, k=None, mode="or", allowed=allowed
@@ -1227,14 +1341,14 @@ class InvertedIndex:
         postings, so the fused scan is the 100 TB shape. Results are
         identical; the oracle row pins them.)"""
         if not subqueries:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         sub_terms: list[list[str]] = []
         for q in subqueries:
             t = sorted(set(tokenize(q) if isinstance(q, str) else q))
             sub_terms.append(t)
         all_terms = sorted({t for ts in sub_terms for t in ts})
         if not all_terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         dfs = self.term_stats(all_terms)
         meta = self.meta
         idfs = {t: idf(meta.n_docs, dfs.get(t, 0)) for t in all_terms}
@@ -1249,10 +1363,7 @@ class InvertedIndex:
                 restrict,
             )
 
-            postings = {
-                row["term"]: TermPostings(row)
-                for row in (t._asdict() for t in pdf.itertuples(index=False))
-            }
+            postings = _postings_of(_segment_rows(pdf))
             per_sub: list[tuple[np.ndarray, np.ndarray]] = []
             for ts in sub_terms:
                 present = [t for t in ts if t in postings]
@@ -1487,7 +1598,7 @@ class InvertedIndex:
             live_arr = live_arr[~np.isin(live_arr, self.tombstones)]
         live = [int(i) for i in live_arr]
         if not live:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         wanted = self.spark.createDataFrame(
             [(i,) for i in sorted(set(live))], "doc_id long"
         )
@@ -1671,17 +1782,17 @@ class InvertedIndex:
         blended-df deviation is documented in query/expand.py)."""
         toks = tokenize(text)
         if not toks:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         expansions = self.expand_prefix(toks[-1], max_expansions)
         if operator == "or":
             terms = sorted(set(toks[:-1]) | set(expansions))
             if not terms:
-                return self.spark.createDataFrame([], TOPK_SCHEMA)
+                return local_frame(self.spark, TOPK_SCHEMA)
             return self.search(terms, k=k, mode="or")
         if operator != "and":
             raise ValueError(f"unknown operator {operator!r}")
         if not expansions:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         groups = [[t] for t in dict.fromkeys(toks[:-1])] + [expansions]
         return self.search(None, k=k, mode="and", groups=groups)
 
@@ -1707,7 +1818,7 @@ class InvertedIndex:
         driver-side id materialization on that path."""
         distinct = sorted(set(terms))
         if not distinct:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
 
         def count_fn(pdf: pd.DataFrame) -> pd.DataFrame:
             arrs = [
@@ -1754,17 +1865,14 @@ class InvertedIndex:
 
         prep = self._near_prep(term, term)
         if prep is None:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         distinct, idfs = prep
         meta = self.meta
         avgdl, k1, b = meta.avgdl, meta.k1, meta.b
         excluded = self.tombstones
 
         def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = {
-                row["term"]: TermPostings(row)
-                for row in (t._asdict() for t in pdf.itertuples(index=False))
-            }
+            postings = _postings_of(_segment_rows(pdf))
             docs = restrict(
                 span_first_match(postings, term, end), excluded, allowed
             )
@@ -1779,8 +1887,7 @@ class InvertedIndex:
             .groupBy("seg_id")
             .applyInPandas(score_fn, TOPK_SCHEMA)
         )
-        ordered = per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return ordered.limit(k) if k is not None else ordered
+        return _global_topk(per_seg, k)
 
     def search_span_not(
         self,
@@ -1806,17 +1913,14 @@ class InvertedIndex:
             )
         dfs = self.term_stats([include])
         if include not in dfs:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         meta = self.meta
         idfs = {include: idf(meta.n_docs, dfs[include])}
         avgdl, k1, b = meta.avgdl, meta.k1, meta.b
         excluded = self.tombstones
 
         def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = {
-                row["term"]: TermPostings(row)
-                for row in (t._asdict() for t in pdf.itertuples(index=False))
-            }
+            postings = _postings_of(_segment_rows(pdf))
             docs = restrict(
                 span_not_match(postings, include, exclude, pre, post),
                 excluded, allowed,
@@ -1834,8 +1938,7 @@ class InvertedIndex:
             .groupBy("seg_id")
             .applyInPandas(score_fn, TOPK_SCHEMA)
         )
-        ordered = per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return ordered.limit(k) if k is not None else ordered
+        return _global_topk(per_seg, k)
 
     # -- delete_by_query (ES document API over the tombstone machinery) -------
 
@@ -2022,7 +2125,7 @@ class InvertedIndex:
         if terms:
             return self.search(terms, k=k, mode=mode, **kw)
         if zero_terms_query == "none":
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         if corpus is None:
             raise ValueError("zero_terms_query='all' needs the corpus DataFrame")
         return self.match_all(corpus, k=k)
@@ -2196,33 +2299,46 @@ class InvertedIndex:
         mode: str = "and",
         **kw,
     ) -> dict:
-        """ES `profile=true`: run the query and return a timing + plan
-        breakdown next to the hits. ES profiles Lucene collector phases;
-        the engine's equivalent phases are planning (Catalyst analysis +
-        physical planning of the scoring DataFrame) and execution (the
-        distributed collect). The physical plan string is the engine's
-        analog of ES's per-shard query breakdown — it shows the pushed
-        term filter, the per-segment scoring exchange, and the global
-        top-k, the three phases every profile question is about.
+        """ES `profile=true`: run the query and return a timing, placement
+        and plan breakdown next to the hits. ES profiles Lucene collector
+        phases; the engine's equivalent phases are planning (compile, and
+        Catalyst analysis + physical planning of the scoring DataFrame)
+        and execution (the collect). The physical plan string is the
+        engine's analog of ES's per-shard query breakdown — distributed, it
+        shows the pushed term filter, the per-segment scoring exchange and
+        the global top-k; driver-placed, a LocalTableScan, since the scan
+        and the kernels ran in planning.
 
         Returns {"hits": list[Row], "took_ms", "planning_ms",
-        "execution_ms", "plan": str}. Diagnostic surface — not a
-        DataFrame op; don't put it in a data path."""
+        "execution_ms", "plan": str, "backend": "driver" | "distributed",
+        "postings_estimate": Σ df the placement was chosen from,
+        "postings_rows": segment posting rows the scan returned}.
+        Diagnostic surface — not a DataFrame op; don't put it in a data
+        path."""
         import time as _time
 
-        t0 = _time.monotonic()
-        df = self.search(query, k=k, mode=mode, **kw)
+        self._trace = trace = {
+            "backend": "driver", "postings_estimate": 0, "postings_rows": 0,
+        }
+        try:
+            t0 = _time.monotonic()
+            df = self.search(query, k=k, mode=mode, **kw)
+        finally:
+            self._trace = None
         qe = df._jdf.queryExecution()
         plan = qe.executedPlan().toString()
         t1 = _time.monotonic()
         hits = df.collect()
         t2 = _time.monotonic()
+        if trace["backend"] == "distributed":
+            trace["postings_rows"] = _scan_filter_rows(qe.executedPlan())
         return {
             "hits": hits,
             "took_ms": round((t2 - t0) * 1000.0, 3),
             "planning_ms": round((t1 - t0) * 1000.0, 3),
             "execution_ms": round((t2 - t1) * 1000.0, 3),
             "plan": plan,
+            **trace,
         }
 
     def search_named(
@@ -2257,8 +2373,7 @@ class InvertedIndex:
         res = res.withColumn(
             "matched_queries", F.concat_ws("|", *flags)
         ).drop(*[f"_m_{n}" for n in sorted(named)])
-        ordered = res.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return ordered.limit(k) if k is not None else ordered
+        return _global_topk(res, k)
 
     def analyze(
         self,
@@ -2390,7 +2505,7 @@ class InvertedIndex:
         schema = self.DECODE_SCHEMA + (", dl long" if with_dl else "")
         distinct = sorted(set(terms))
         if not distinct:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema)
         excluded = self.tombstones
 
         def decode_fn(it):
@@ -2448,16 +2563,16 @@ class InvertedIndex:
         groups = [expand(alts) for alts in parsed.groups]
         nots = expand(parsed.nots)
         if not groups:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         if default_operator == "and":
             if any(not g for g in groups):  # a clause with zero expansions
-                return self.spark.createDataFrame([], TOPK_SCHEMA)
+                return local_frame(self.spark, TOPK_SCHEMA)
             return self.search(
                 None, k=k, mode="and", groups=groups, must_not=nots
             )
         flat = sorted({t for g in groups for t in g})
         if not flat:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         return self.search(flat, k=k, mode="or", must_not=nots)
 
     # -- span algebra + intervals ---------------------------------------------
@@ -2484,10 +2599,7 @@ class InvertedIndex:
         excluded = self.tombstones
 
         def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = {
-                row["term"]: TermPostings(row)
-                for row in (t._asdict() for t in pdf.itertuples(index=False))
-            }
+            postings = _postings_of(_segment_rows(pdf))
             docs = restrict(doc_fn(postings), excluded, None)
             score = exact_scores(docs, terms, postings, idfs, avgdl, k1, b)
             order = np.lexsort((docs, -score))
@@ -2500,8 +2612,7 @@ class InvertedIndex:
             .groupBy("seg_id")
             .applyInPandas(score_fn, TOPK_SCHEMA)
         )
-        ordered = per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return ordered.limit(k) if k is not None else ordered
+        return _global_topk(per_seg, k)
 
     def span_multi(
         self,
@@ -2681,10 +2792,7 @@ class InvertedIndex:
         masked_expr = _prefix_span_expr(masked_clause, _MASK_PREFIX)
 
         def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = {
-                row["term"]: TermPostings(row)
-                for row in (t._asdict() for t in pdf.itertuples(index=False))
-            }
+            postings = _postings_of(_segment_rows(pdf))
             docs_m, _, _ = near_span_pairs(
                 _span_expr_eval(clause, postings),
                 _span_expr_eval(masked_expr, postings),
@@ -2830,10 +2938,10 @@ class InvertedIndex:
         if mode == "or":
             flat = sorted({t for g in groups for t in g})
             if not flat:
-                return self.spark.createDataFrame([], TOPK_SCHEMA)
+                return local_frame(self.spark, TOPK_SCHEMA)
             return self.search(flat, k=k, mode="or", **kwargs)
         if any(not g for g in groups):
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         flat = sorted({t for g in groups for t in g})
         return self.search(flat, k=k, mode="and", groups=groups, **kwargs)
 
@@ -2922,7 +3030,7 @@ class InvertedIndex:
             set(tokenize(query) if isinstance(query, str) else query)
         )
         if not terms:
-            return self.spark.createDataFrame([], self.EXPLAIN_SCHEMA)
+            return local_frame(self.spark, self.EXPLAIN_SCHEMA)
         dfs = self.term_stats(terms)
         meta = self.meta
         idfs = {t: idf(meta.n_docs, dfs.get(t, 0)) for t in terms}
@@ -2977,7 +3085,7 @@ class InvertedIndex:
         broadcasts it)."""
         did = int(doc_id)
         if bool(np.isin(did, self.tombstones).any()):
-            return self.spark.createDataFrame([], "term string, tf long, df long")
+            return local_frame(self.spark, "term string, tf long, df long")
         ids = self.spark.createDataFrame([(did,)], "doc_id long")
         seg_scan = self.segments
         with_seg = self._filter_with_seg(ids)
@@ -3452,38 +3560,17 @@ class InvertedIndex:
         of the terms lie within `slop` positions (`ordered` requires t1
         before t2). Scores are the two-term AND scores restricted to
         matching docs — same composition contract as search_phrase."""
-        from elasticsearch_assets_spark.query.phrase import near_match
-        from elasticsearch_assets_spark.query.wand import restrict
-
         prep = self._near_prep(t1, t2)
         if prep is None:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         distinct, idfs = prep
         meta = self.meta
-        avgdl, k1, b = meta.avgdl, meta.k1, meta.b
-        excluded = self.tombstones
-
-        def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = {
-                row["term"]: TermPostings(row)
-                for row in (t._asdict() for t in pdf.itertuples(index=False))
-            }
-            docs = restrict(
-                near_match(postings, t1, t2, slop, ordered), excluded, allowed
-            )
-            score = exact_scores(docs, distinct, postings, idfs, avgdl, k1, b)
-            order = np.lexsort((docs, -score))
-            if k is not None:
-                order = order[:k]
-            return pd.DataFrame({"doc_id": docs[order], "score": score[order]})
-
-        per_seg = (
-            self.segments.where(F.col("term").isin(distinct))
-            .groupBy("seg_id")
-            .applyInPandas(score_fn, TOPK_SCHEMA)
+        kernel = functools.partial(
+            _score_near, t1=t1, t2=t2, slop=slop, ordered=ordered,
+            distinct=distinct, idfs=idfs, avgdl=meta.avgdl, k1=meta.k1,
+            b=meta.b, k=k, excluded=self.tombstones, allowed=allowed,
         )
-        ordered_df = per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return ordered_df.limit(k) if k is not None else ordered_df
+        return _global_topk(self._per_segment(distinct, kernel), k)
 
     def search_near_local(
         self,
@@ -3496,40 +3583,17 @@ class InvertedIndex:
     ) -> list[tuple[int, float]]:
         """Serving-path proximity search — identical results to
         `search_near().collect()` (tested)."""
-        from elasticsearch_assets_spark.query.phrase import near_match
-        from elasticsearch_assets_spark.query.wand import restrict
-
         prep = self._near_prep(t1, t2)
         if prep is None:
             return []
         distinct, idfs = prep
         meta = self.meta
-        rows = self.segments.where(F.col("term").isin(distinct)).collect()
-        by_seg: dict[int, dict[str, TermPostings]] = {}
-        for r in rows:
-            by_seg.setdefault(r["seg_id"], {})[r["term"]] = TermPostings(r)
-        out_docs, out_scores = [], []
-        for postings in by_seg.values():
-            docs = restrict(
-                near_match(postings, t1, t2, slop, ordered),
-                self.tombstones, allowed,
-            )
-            if docs.size == 0:
-                continue
-            out_docs.append(docs)
-            out_scores.append(
-                exact_scores(
-                    docs, distinct, postings, idfs, meta.avgdl, meta.k1, meta.b
-                )
-            )
-        if not out_docs:
-            return []
-        docs = np.concatenate(out_docs)
-        scores = np.concatenate(out_scores)
-        order = np.lexsort((docs, -scores))
-        if k is not None:
-            order = order[:k]
-        return [(int(docs[i]), float(scores[i])) for i in order]
+        kernel = functools.partial(
+            _score_near, t1=t1, t2=t2, slop=slop, ordered=ordered,
+            distinct=distinct, idfs=idfs, avgdl=meta.avgdl, k1=meta.k1,
+            b=meta.b, k=k, excluded=self.tombstones, allowed=allowed,
+        )
+        return self._driver_hits(distinct, kernel, k)
 
     # -- query strings -------------------------------------------------------
 
@@ -3653,15 +3717,15 @@ class InvertedIndex:
         those")."""
         likes = [doc_id] if isinstance(doc_id, int) else list(doc_id)
         if not likes:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         rows = (
             corpus.where(F.col(id_col).isin(likes)).select(text_col).collect()
         )
         if not rows:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         toks = [t for r in rows for t in tokenize(r[0])]
         if not toks:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         banned: set = set()
         if unlike is not None:
             unl = [unlike] if isinstance(unlike, int) else list(unlike)
@@ -3678,7 +3742,7 @@ class InvertedIndex:
             key=lambda t: (-tf[t], dfs[t], t),
         )[:max_terms]
         if not sel:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         # k+|likes| then drop the source docs: rank-safe (≤|likes| removed)
         res = self.search(sel, k=None if k is None else k + len(likes), mode="or")
         res = res.where(~F.col("doc_id").isin(likes))
@@ -3742,46 +3806,18 @@ class InvertedIndex:
         `search(groups=...)`'s scoring contract restricted to
         phrase-matching docs. groups=None is bit-identical to the plain
         phrase kernel (tested)."""
-        from elasticsearch_assets_spark.query.phrase import phrase_match
-        from elasticsearch_assets_spark.query.wand import (
-            restrict,
-            topk_group_conjunctive,
-        )
-
         prep = self._phrase_prep(phrase, groups, boosts)
         if prep is None:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         toks, distinct, idfs, kept = prep
         meta = self.meta
-        avgdl, k1, b = meta.avgdl, meta.k1, meta.b
-        excluded = self.tombstones
-        fetch = sorted(set(distinct) | {t for g in (kept or []) for t in g})
-
-        def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = {
-                row["term"]: TermPostings(row)
-                for row in (t._asdict() for t in pdf.itertuples(index=False))
-            }
-            docs = restrict(phrase_match(postings, toks), excluded, allowed)
-            if kept is not None:
-                allg = [[t] for t in distinct] + kept
-                docs, score = topk_group_conjunctive(
-                    allg, postings, idfs, avgdl, k1, b, k, allowed=docs
-                )
-                return pd.DataFrame({"doc_id": docs, "score": score})
-            score = exact_scores(docs, distinct, postings, idfs, avgdl, k1, b)
-            order = np.lexsort((docs, -score))
-            if k is not None:
-                order = order[:k]
-            return pd.DataFrame({"doc_id": docs[order], "score": score[order]})
-
-        per_seg = (
-            self.segments.where(F.col("term").isin(fetch))
-            .groupBy("seg_id")
-            .applyInPandas(score_fn, TOPK_SCHEMA)
+        kernel = functools.partial(
+            _score_phrase, toks=toks, distinct=distinct, kept=kept, idfs=idfs,
+            avgdl=meta.avgdl, k1=meta.k1, b=meta.b, k=k,
+            excluded=self.tombstones, allowed=allowed,
         )
-        ordered = per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return ordered.limit(k) if k is not None else ordered
+        fetch = sorted(set(distinct) | {t for g in (kept or []) for t in g})
+        return _global_topk(self._per_segment(fetch, kernel), k)
 
     def search_phrase_filtered(
         self,
@@ -3812,7 +3848,7 @@ class InvertedIndex:
 
         prep = self._phrase_prep(phrase, groups, boosts)
         if prep is None:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         toks, distinct, idfs, kept = prep
         fetch = sorted(set(distinct) | {t for g in (kept or []) for t in g})
         ids = filtered.select(F.col(id_col).cast("long").alias("doc_id"))
@@ -3899,54 +3935,18 @@ class InvertedIndex:
         """Serving-path phrase search: one pushed-down posting collect, then
         the same kernels on the driver — identical to
         `search_phrase().collect()` (tested)."""
-        from elasticsearch_assets_spark.query.phrase import phrase_match
-        from elasticsearch_assets_spark.query.wand import (
-            restrict,
-            topk_group_conjunctive,
-        )
-
         prep = self._phrase_prep(phrase, groups, boosts)
         if prep is None:
             return []
         toks, distinct, idfs, kept = prep
         meta = self.meta
+        kernel = functools.partial(
+            _score_phrase, toks=toks, distinct=distinct, kept=kept, idfs=idfs,
+            avgdl=meta.avgdl, k1=meta.k1, b=meta.b, k=k,
+            excluded=self.tombstones, allowed=allowed,
+        )
         fetch = sorted(set(distinct) | {t for g in (kept or []) for t in g})
-        rows = self.segments.where(F.col("term").isin(fetch)).collect()
-        by_seg: dict[int, dict[str, TermPostings]] = {}
-        for r in rows:
-            by_seg.setdefault(r["seg_id"], {})[r["term"]] = TermPostings(r)
-        out_docs, out_scores = [], []
-        for postings in by_seg.values():
-            docs = restrict(
-                phrase_match(postings, toks), self.tombstones, allowed
-            )
-            if kept is not None:
-                allg = [[t] for t in distinct] + kept
-                docs, score = topk_group_conjunctive(
-                    allg, postings, idfs,
-                    meta.avgdl, meta.k1, meta.b, None, allowed=docs,
-                )
-                if docs.size == 0:
-                    continue
-                out_docs.append(docs)
-                out_scores.append(score)
-                continue
-            if docs.size == 0:
-                continue
-            out_docs.append(docs)
-            out_scores.append(
-                exact_scores(
-                    docs, distinct, postings, idfs, meta.avgdl, meta.k1, meta.b
-                )
-            )
-        if not out_docs:
-            return []
-        docs = np.concatenate(out_docs)
-        scores = np.concatenate(out_scores)
-        order = np.lexsort((docs, -scores))
-        if k is not None:
-            order = order[:k]
-        return [(int(docs[i]), float(scores[i])) for i in order]
+        return self._driver_hits(fetch, kernel, k)
 
     def search_phrase_prefix(
         self,
@@ -3972,7 +3972,7 @@ class InvertedIndex:
 
         toks = tokenize(phrase) if isinstance(phrase, str) else list(phrase)
         if not toks:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         fixed = toks[:-1]
         if not fixed:
             return self.search_prefix(toks[-1], k=k, max_expansions=max_expansions)
@@ -3983,12 +3983,12 @@ class InvertedIndex:
             )
         expansions = self.expand_prefix(toks[-1], max_expansions)
         if not expansions:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         distinct_fixed = sorted(set(fixed))
         all_terms = sorted(set(distinct_fixed) | set(expansions))
         dfs = self.term_stats(all_terms)
         if any(t not in dfs for t in distinct_fixed):
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         terms = sorted(t for t in all_terms if t in dfs)
         meta = self.meta
         idfs = {t: idf(meta.n_docs, dfs[t]) for t in terms}
@@ -3996,10 +3996,7 @@ class InvertedIndex:
         excluded = self.tombstones
 
         def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = {
-                row["term"]: TermPostings(row)
-                for row in (t._asdict() for t in pdf.itertuples(index=False))
-            }
+            postings = _postings_of(_segment_rows(pdf))
             docs = restrict(
                 phrase_prefix_match(postings, fixed, expansions),
                 excluded, allowed,
@@ -4015,8 +4012,7 @@ class InvertedIndex:
             .groupBy("seg_id")
             .applyInPandas(score_fn, TOPK_SCHEMA)
         )
-        ordered = per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return ordered.limit(k) if k is not None else ordered
+        return _global_topk(per_seg, k)
 
     def _filter_with_seg(self, ids: DataFrame) -> DataFrame | None:
         """Map a filter-id DataFrame to (seg_id, doc_id) executor-side.
@@ -4198,7 +4194,7 @@ class InvertedIndex:
         else:
             terms = sorted(set(tokenize(query) if isinstance(query, str) else query))
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         opt_terms = sorted(
             {t for ts, _ in (opt_should or []) for t in ts} - set(terms)
         )
@@ -4206,9 +4202,9 @@ class InvertedIndex:
         if mode == "and":
             if groups is not None:
                 if any(all(t not in dfs for t in g) for g in groups):
-                    return self.spark.createDataFrame([], TOPK_SCHEMA)
+                    return local_frame(self.spark, TOPK_SCHEMA)
             elif any(t not in dfs for t in terms):
-                return self.spark.createDataFrame([], TOPK_SCHEMA)
+                return local_frame(self.spark, TOPK_SCHEMA)
         meta = self.meta
         idfs = {
             t: idf(meta.n_docs, dfs.get(t, 0)) * (boosts or {}).get(t, 1.0)
@@ -4229,18 +4225,13 @@ class InvertedIndex:
                 )
             allowed = np.unique(right["doc_id"].to_numpy(np.int64))
             if opt_should is not None:
-                postings = {
-                    row["term"]: TermPostings(row)
-                    for row in (t._asdict() for t in left.itertuples(index=False))
-                }
-                docs, score = topk_optional_should(
-                    must_groups, opt_should, postings, idfs, avgdl, k1, b,
-                    k, excluded, allowed, opt_msm,
+                return _score_optional_should(
+                    _postings_of(_segment_rows(left)), must_groups, opt_should,
+                    idfs, avgdl, k1, b, k, excluded, allowed, opt_msm,
                 )
-                return pd.DataFrame({"doc_id": docs, "score": score})
-            return _score_segment(
-                left, terms, idfs, avgdl, k1, b, mode, k, excluded, allowed,
-                None, groups, min_should_match,
+            return _score_postings(
+                _postings_of(_segment_rows(left)), terms, idfs, avgdl, k1, b,
+                mode, k, excluded, allowed, None, groups, min_should_match,
             )
 
         posts = self.segments.where(
@@ -4251,8 +4242,7 @@ class InvertedIndex:
             .cogroup(ids_with_seg.groupBy("seg_id"))
             .applyInPandas(score_fn, TOPK_SCHEMA)
         )
-        ordered = per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return ordered.limit(k) if k is not None else ordered
+        return _global_topk(per_seg, k)
 
     def materialize(self, topk: DataFrame, corpus: DataFrame, on: str = "doc_id") -> DataFrame:
         """J3: join the k winners back to their documents (broadcast the ids)."""
@@ -4317,7 +4307,7 @@ class InvertedIndex:
             if opt:
                 score_terms |= {t for ts, _ in opt for t in ts}
         if not score_terms:
-            return self.spark.createDataFrame([], MSEARCH_SCHEMA)
+            return local_frame(self.spark, MSEARCH_SCHEMA)
         dfs = self.term_stats(sorted(score_terms))
         meta = self.meta
         avgdl, k1, b = meta.avgdl, meta.k1, meta.b
@@ -4337,22 +4327,17 @@ class InvertedIndex:
             kspecs.append((qid, terms, idfs, mode, kq, msm, not_terms, opt, omsm))
             fetch |= set(terms) | set(not_terms) | opt_terms
         if not kspecs:
-            return self.spark.createDataFrame([], MSEARCH_SCHEMA)
+            return local_frame(self.spark, MSEARCH_SCHEMA)
 
         def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = {
-                row["term"]: TermPostings(row)
-                for row in (t._asdict() for t in pdf.itertuples(index=False))
-            }
+            postings = _postings_of(_segment_rows(pdf))
             frames = []
             for qid, terms, idfs, mode, kq, msm, not_terms, opt, omsm in kspecs:
                 if opt is not None:
-                    excl = _merge_not_excluded(postings, not_terms, excluded)
-                    docs, score = topk_optional_should(
-                        [[t] for t in terms], opt, postings, idfs, avgdl,
-                        k1, b, kq, excl, None, omsm,
+                    out = _score_optional_should(
+                        postings, [[t] for t in terms], opt, idfs, avgdl,
+                        k1, b, kq, excluded, None, omsm, not_terms,
                     )
-                    out = pd.DataFrame({"doc_id": docs, "score": score})
                 else:
                     out = _score_postings(
                         postings, terms, idfs, avgdl, k1, b, mode, kq,
@@ -4473,7 +4458,7 @@ class InvertedIndex:
         hi_c = F.col("term") <= hi if include_upper else F.col("term") < hi
         terms = expand_terms(self.stats, lo_c & hi_c, max_expansions)
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         return self.search(terms, k=k, mode="or")
 
     def validate_query(self, q: str) -> tuple[bool, str]:
@@ -4644,11 +4629,11 @@ class InvertedIndex:
             )
         terms = sorted(query_weights)
         if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         dfs = self.term_stats(terms)
         present = [t for t in terms if t in dfs]
         if not present:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(self.spark, TOPK_SCHEMA)
         if prune:
             avg_df = sum(dfs[t] for t in present) / len(present)
             best_w = max(abs(float(query_weights[t])) for t in present)
@@ -4664,7 +4649,7 @@ class InvertedIndex:
                 kept_set = set(kept)
                 kept = [t for t in present if t not in kept_set]
             if not kept:
-                return self.spark.createDataFrame([], TOPK_SCHEMA)
+                return local_frame(self.spark, TOPK_SCHEMA)
             present = kept
         n = self.meta.n_docs
         wmap = F.create_map(
@@ -5020,7 +5005,7 @@ def combined_fields(
     first_idx = next(iter(field_indexes.values()))[0]
     spark = first_idx.spark
     if not terms:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return local_frame(spark, TOPK_SCHEMA)
     k1, b = first_idx.meta.k1, first_idx.meta.b
 
     # weighted tf rows from every field's index, one union + one hash agg
@@ -5123,7 +5108,7 @@ def cross_fields(
     first_idx = next(iter(field_indexes.values()))[0]
     spark = first_idx.spark
     if not terms:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return local_frame(spark, TOPK_SCHEMA)
 
     per_field_df = {
         f: idx.term_stats(terms) for f, (idx, _w) in field_indexes.items()
@@ -5134,7 +5119,7 @@ def cross_fields(
     }
     live_terms = [t for t in terms if df_blend[t] > 0]
     if not live_terms:
-        return spark.createDataFrame([], TOPK_SCHEMA)
+        return local_frame(spark, TOPK_SCHEMA)
 
     parts = []
     for f, (idx, w) in field_indexes.items():
@@ -5179,7 +5164,7 @@ def cross_fields(
     if mode == "and":
         if len(live_terms) != len(terms):
             # a term absent from EVERY field can't be satisfied anywhere
-            return spark.createDataFrame([], TOPK_SCHEMA)
+            return local_frame(spark, TOPK_SCHEMA)
         agg = agg.where(F.col("_nt") == len(live_terms))
     out = agg.select("doc_id", "score").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()

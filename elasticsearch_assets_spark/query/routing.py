@@ -187,7 +187,9 @@ class RoutedIndex(ShardedIndex):
         routing=None,
         **kwargs,
     ) -> DataFrame:
-        from elasticsearch_assets_spark.query.engine import TOPK_SCHEMA
+        from elasticsearch_assets_spark.query.engine import hits_frame
 
-        hits = self.search_local(query, k=k, mode=mode, routing=routing, **kwargs)
-        return self.spark.createDataFrame(hits or [], TOPK_SCHEMA)
+        return hits_frame(
+            self.spark,
+            self.search_local(query, k=k, mode=mode, routing=routing, **kwargs),
+        )

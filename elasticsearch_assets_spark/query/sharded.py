@@ -11,12 +11,18 @@ the coordinator merges per-shard top-k.
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import functools
+
+from pyspark.sql import DataFrame, SparkSession
 
 from elasticsearch_assets_spark.analysis.tokenizer import tokenize
 from elasticsearch_assets_spark.query.bm25 import idf
-from elasticsearch_assets_spark.query.engine import TOPK_SCHEMA, InvertedIndex
+from elasticsearch_assets_spark.query.engine import (
+    InvertedIndex,
+    _score_optional_should,
+    _score_postings,
+    hits_frame,
+)
 
 
 class ShardedIndex:
@@ -102,56 +108,25 @@ class ShardedIndex:
 
     def _shard_local(self, shard, terms, idfs, k, mode,
                      opt_clauses=None, opt_msm: int = 0):
-        """search_local's kernel loop with GLOBAL (idfs, avgdl) substituted."""
-        from pyspark.sql import functions as SF
-
-        from elasticsearch_assets_spark.query.wand import (
-            TermPostings,
-            exact_scores,
-            restrict,
-            topk_conjunctive,
-            topk_disjunctive_pruned,
-            topk_optional_should,
-        )
-
+        """One shard's driver-placed top-k (`InvertedIndex.search_local`'s
+        kernels) with GLOBAL (idfs, avgdl) substituted."""
+        if opt_clauses is not None:
+            kernel = functools.partial(
+                _score_optional_should, must_groups=[[t] for t in terms],
+                clauses=opt_clauses, idfs=idfs, avgdl=self.avgdl, k1=self.k1,
+                b=self.b, k=k, excluded=shard.tombstones, allowed=None,
+                min_should_match=opt_msm,
+            )
+        else:
+            kernel = functools.partial(
+                _score_postings, terms=terms, idfs=idfs, avgdl=self.avgdl,
+                k1=self.k1, b=self.b, mode=mode, k=k,
+                excluded=shard.tombstones,
+            )
         fetch = sorted(
             set(terms) | {t for ts, _ in (opt_clauses or []) for t in ts}
         )
-        rows = shard.segments.where(SF.col("term").isin(fetch)).collect()
-        by_seg: dict[int, dict] = {}
-        for r in rows:
-            by_seg.setdefault(r["seg_id"], {})[r["term"]] = TermPostings(r)
-        out: list[tuple[int, float]] = []
-        for postings in by_seg.values():
-            if opt_clauses is not None:
-                d, s = topk_optional_should(
-                    [[t] for t in terms], opt_clauses, postings, idfs,
-                    self.avgdl, self.k1, self.b, k, shard.tombstones,
-                    None, opt_msm,
-                )
-            elif mode == "and":
-                d, s = topk_conjunctive(
-                    terms, postings, idfs, self.avgdl, self.k1, self.b, k,
-                    shard.tombstones,
-                )
-            elif k is not None:
-                d, s = topk_disjunctive_pruned(
-                    terms, postings, idfs, self.avgdl, self.k1, self.b, k,
-                    shard.tombstones,
-                )
-            else:
-                present = [t for t in terms if t in postings]
-                d = (
-                    np.unique(np.concatenate([postings[t].doc_ids for t in present]))
-                    if present
-                    else np.array([], dtype=np.int64)
-                )
-                d = restrict(d, shard.tombstones, None)
-                s = exact_scores(
-                    d, terms, postings, idfs, self.avgdl, self.k1, self.b
-                )
-            out.extend(zip((int(x) for x in d), (float(x) for x in s)))
-        return out
+        return shard._driver_hits(fetch, kernel, k)
 
     def search(
         self,
@@ -161,5 +136,6 @@ class ShardedIndex:
         boosts: list[float] | None = None,
     ) -> DataFrame:
         """DataFrame result for parity with InvertedIndex.search."""
-        hits = self.search_local(query, k=k, mode=mode, boosts=boosts)
-        return self.spark.createDataFrame(hits or [], TOPK_SCHEMA)
+        return hits_frame(
+            self.spark, self.search_local(query, k=k, mode=mode, boosts=boosts)
+        )

@@ -22,10 +22,44 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from elasticsearch_assets_spark.index.build import build_index  # noqa: E402
 from elasticsearch_assets_spark.operators import dedup as OD  # noqa: E402
+from elasticsearch_assets_spark.query import engine  # noqa: E402
 from elasticsearch_assets_spark.query.engine import InvertedIndex  # noqa: E402
 from elasticsearch_assets_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
+
+PLACEMENT_NOTE = """## Search placement: driver below DRIVER_POSTINGS_MAX, distributed above
+
+`InvertedIndex.search()` and `search_optional_should()` estimate a query's
+postings as the sum of df over the fetched terms, must_not terms included.
+Below `engine.DRIVER_POSTINGS_MAX` (1,000,000) one pushed `term IN` scan is
+collected and the segment kernels run on the driver; the result is a
+LocalTableScan, so its collect() runs no Spark job. At or above it the
+applyInPandas plan runs. This audit forces the distributed placement, so
+the search plans below are the ones large queries take.
+
+The cap is the measured crossover of `search(terms, k=10, mode="or")
+.collect()`: `pages_df` indexes with 16 segments, head-term OR queries,
+`local[4]` on a shared 4-core, 15 GB host in a quiet window, median of 6
+interleaved runs per placement.
+
+| docs | terms | sum of df | driver ms | distributed ms | driver / distributed |
+|---|---|---|---|---|---|
+| 100k | 1 (`data`) | 96,803 | 178 | 504 | 0.35 |
+| 100k | 1 (`the`) | 98,999 | 258 | 531 | 0.49 |
+| 100k | 8 | 705,448 | 453 | 719 | 0.63 |
+| 100k | 13 | 1,040,939 | 594 | 664 | 0.90 |
+| 400k | 1 (`the`) | 392,714 | 472 | 727 | 0.65 |
+| 400k | 2 | 774,502 | 534 | 676 | 0.79 |
+| 400k | 3 | 1,141,694 | 597 | 601 | 0.99 |
+| 400k | 5 | 1,834,749 | 817 | 776 | 1.05 |
+| 400k | 8 | 2,761,728 | 1,146 | 962 | 1.19 |
+| 400k | 13 | 4,058,537 | 1,631 | 1,056 | 1.54 |
+
+The two placements meet near 1.1M postings. The driver side is one
+Python process whatever the cluster size, while the distributed side gains
+executor cores, so on a larger cluster the crossover moves down, not up.
+"""
 
 
 def plan_of(df) -> str:
@@ -45,6 +79,10 @@ def main() -> None:
     if not os.path.exists(os.path.join(idx_dir, "meta.json")):
         build_index(spark, docs, idx_dir, num_segments=8)
     idx = InvertedIndex(spark, idx_dir)
+    # audit the distributed placement of search(), the plan every query
+    # above DRIVER_POSTINGS_MAX takes; at this index size each query would
+    # otherwise be scored on the driver and plan as a LocalTableScan
+    engine.DRIVER_POSTINGS_MAX = 0
 
     sections = []
 
@@ -804,6 +842,7 @@ def main() -> None:
         "Evidence that the load-bearing plans have the shape the 100 TB "
         "design claims. Regenerate after engine changes; review the diff.\n"
     )
+    out.append(PLACEMENT_NOTE)
     for title, claim, plan in sections:
         # the field-masking key prefix is a literal NUL byte — escape it
         # so PLANS.md stays a text file

@@ -740,6 +740,44 @@ def test_serial_pipeline_children(corpus, matches, mpdf):
         assert g == pytest.approx(e)
 
 
+def test_serial_pipeline_canonical_spelling(spark, corpus, matches, mpdf):
+    """The ES spelling: the pipeline is a direct child of the histogram
+    with `buckets_path: "_count"`, so the series is the histogram's own
+    buckets, ordered by its key (9 docs, interval 3: counts 3, 3, 3)."""
+    nine = spark.createDataFrame(
+        [(i, float(i)) for i in range(9)], "doc_id long, v double"
+    )
+    out = aggs_dsl(
+        {"h": {"histogram": {"field": "v", "interval": 3},
+               "aggs": {
+                   "cum": {"cumulative_sum": {"buckets_path": "_count"}},
+                   "der": {"derivative": {"buckets_path": "_count"}},
+               }}},
+        nine.select("doc_id"), nine,
+    )
+    cum = _pd(out["h>cum"]).sort_values("h")
+    assert cum.h.tolist() == [0.0, 3.0, 6.0]
+    assert cum.value.tolist() == [3, 6, 9]
+    der = _pd(out["h>der"]).sort_values("h").value.tolist()
+    assert pd.isna(der[0]) and der[1:] == [0, 0]
+    # nested under a terms level: one series per host
+    out = aggs_dsl(
+        {"byhost": {"terms": {"field": "host"}, "aggs": {
+            "hist": {"histogram": {"field": "price", "interval": 8.0},
+                     "aggs": {"cum": {"cumulative_sum": {
+                         "buckets_path": "_count"}}}}}}},
+        matches, corpus,
+    )
+    base = mpdf[mpdf.host.notna()].copy()
+    base["bucket"] = (base.price // 8.0) * 8.0
+    series = (
+        base.groupby(["host", "bucket"]).size().rename("n").reset_index()
+        .sort_values(["host", "bucket"])
+    )
+    got = _pd(out["byhost>hist>cum"]).sort_values(["byhost", "hist"])
+    assert got.value.tolist() == series.groupby("host").n.cumsum().tolist()
+
+
 def test_filters_level_refuses_shallower_count_consumers(corpus, matches):
     """Docs matching several filters explode into several rows — metrics,
     count-ordered size cuts, min_doc_count, and pipeline series ABOVE the

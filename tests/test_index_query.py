@@ -100,7 +100,7 @@ def test_materialize(index, spark, corpus_pdf):
     assert all("spark" in r["text"] and "join" in r["text"] for r in rows)
 
 
-def test_search_local_identical_to_distributed(index, spark):
+def test_search_local_identical_to_distributed(index, spark, distributed):
     for terms, mode, k in [
         (["spark", "join"], "and", 10),
         (["the", "data"], "or", 25),
@@ -234,7 +234,7 @@ def test_search_filtered_opaque_mapping_falls_back(spark, tmp_path):
         )
 
 
-def test_search_local_filtered_parity(index, spark):
+def test_search_local_filtered_parity(index, spark, distributed):
     """Serving-path restriction (`search_local(allowed=...)`) must equal
     the distributed filtered search — same kernels, same composition."""
     import numpy as np

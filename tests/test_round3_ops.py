@@ -140,7 +140,7 @@ def test_search_after_pages_stitch_to_full_ranking(index):
     _pages_equal_full_slice(index, ["the", "join"], "and")
 
 
-def test_search_after_local_parity(index):
+def test_search_after_local_parity(index, distributed):
     page1 = index.search(["the", "spark"], k=5, mode="or").collect()
     cur = (page1[-1]["score"], page1[-1]["doc_id"])
     dist = index.search(["the", "spark"], k=5, mode="or", after=cur).collect()
@@ -325,7 +325,7 @@ def test_group_singletons_equal_flat_and(index):
     ]
 
 
-def test_group_serving_and_cogroup_parity(spark, corpus, index):
+def test_group_serving_and_cogroup_parity(spark, corpus, index, distributed):
     groups = [["the"], ["join", "data"]]
     dist = index.search(None, k=15, mode="and", groups=groups).collect()
     loc = index.search_local(None, k=15, mode="and", groups=groups)

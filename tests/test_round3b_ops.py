@@ -89,7 +89,7 @@ def test_msm_counting_matches_bruteforce(corpus, index):
         assert s == or_scores[d]
 
 
-def test_msm_serving_parity_and_validation(index):
+def test_msm_serving_parity_and_validation(index, distributed):
     dist = _pairs(
         index.search(_MSM_TERMS, k=7, mode="or", min_should_match=2)
     )
@@ -126,7 +126,7 @@ def test_boost_one_is_identity_and_scales_idf(index):
         assert abs(s - want) < 1e-9
 
 
-def test_boost_serving_parity(index):
+def test_boost_serving_parity(index, distributed):
     terms = ["spark", "join"]
     dist = _pairs(
         index.search(terms, k=8, mode="and", boosts={"join": 3.0})
@@ -389,7 +389,7 @@ def test_must_not_matches_bruteforce(corpus, index):
         assert s == base[d]
 
 
-def test_must_not_serving_parity_and_composition(index):
+def test_must_not_serving_parity_and_composition(index, distributed):
     dist = _pairs(
         index.search(["spark", "table"], k=8, mode="or", must_not=["join", "merge"])
     )

@@ -422,11 +422,18 @@ def test_zipf_fit_known_distribution(spark):
     assert r["n_vocab"] == 4 and r["n_top"] == 4
 
 
-def test_profile_returns_plan_and_hits(idx):
+def test_profile_returns_plan_and_hits(idx, placement):
     p = idx.profile(["spark"], k=3, mode="or")
     assert len(p["hits"]) == 3
     assert p["execution_ms"] > 0 and p["planning_ms"] >= 0
-    assert "TakeOrdered" in p["plan"] or "CollectLimit" in p["plan"]
+    assert p["backend"] == placement
+    assert p["postings_estimate"] == idx.count_term("spark")
+    seg_rows = idx.segments.where(F.col("term") == "spark").count()
+    assert p["postings_rows"] == seg_rows > 0
+    if placement == "distributed":
+        assert "TakeOrdered" in p["plan"] or "CollectLimit" in p["plan"]
+    else:
+        assert "LocalTableScan" in p["plan"]
 
 
 def test_eql_tail_latest_chains(spark):
