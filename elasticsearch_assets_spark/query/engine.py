@@ -1,17 +1,31 @@
-"""Distributed BM25 top-k query engine over the doc-bucketed segment index.
+"""BM25 top-k query engine over the doc-bucketed segment index.
 
-Query plan (all DataFrame ops; the only Python is the vectorized numpy
-scorer inside applyInPandas):
+Every single-index top-k query is a per-segment kernel — one segment's
+postings ({term: TermPostings}) in, (doc_id, score) candidates out — run
+by one of two executors:
 
-  segments.where(term IN q)              -- parquet row-group skip on term
-    groupBy(seg_id).applyInPandas(score) -- segment-local decode+intersect+topk
-    orderBy(score DESC, doc_id ASC).limit(k)   -- TakeOrderedAndProject merge
+  _score_segments  the pushed `term IN` segment scan, the kernel per
+                   segment, then the global (score DESC, doc_id ASC)
+                   top-k. Placed by the query's estimated postings (Σ df
+                   for position-free kernels, Σ cf for kernels that decode
+                   positions): below DRIVER_POSTINGS_MAX the scan is
+                   collected and every segment scored on the driver (a
+                   LocalTableScan result, no Spark job at collect);
+                   otherwise it is the distributed plan
+
+                     segments.where(term IN q)              -- row-group skip
+                       groupBy(seg_id).applyInPandas(kernel) -- decode+topk
+                       orderBy(score DESC, doc_id ASC).limit(k) -- TakeOrdered
+
+  _cogrouped       filtered search: the same scan cogrouped by seg_id with
+                   the filter's (seg_id, doc_id) rows, each segment's ids
+                   handed to the kernel as `allowed`; always distributed.
 
 Per-segment work is O(postings of query terms in that segment); the global
 merge sees ≤ num_segments × k rows. No shuffle touches raw postings. This is
-the from-scratch replacement for the search the reference delegates at
-/root/reference/asset/elasticsearch_reader/reader.js:11-13, with the
-reference's `size` cap becoming top-k `k` (SURVEY.md §2.3 F1-F4).
+the from-scratch replacement for the search the reference delegates in its
+asset/elasticsearch_reader/reader.js:11-13, with the reference's `size`
+cap becoming top-k `k` (SURVEY.md §2.3 F1-F4).
 """
 
 from __future__ import annotations
@@ -29,9 +43,17 @@ from pyspark.sql.types import StructType
 from elasticsearch_assets_spark.analysis.tokenizer import tokenize
 from elasticsearch_assets_spark.index.stats import IndexMeta, load_meta
 from elasticsearch_assets_spark.query.bm25 import idf
+from elasticsearch_assets_spark.query.phrase import (
+    near_match,
+    phrase_match,
+    phrase_prefix_match,
+    span_first_match,
+    span_not_match,
+)
 from elasticsearch_assets_spark.query.wand import (
     TermPostings,
     exact_scores,
+    restrict,
     topk_conjunctive,
     topk_disjunctive_pruned,
     topk_group_conjunctive,
@@ -96,12 +118,14 @@ def _span_expr_eval(expr, postings):
 TOPK_SCHEMA = "doc_id long, score double"
 MSEARCH_SCHEMA = "query_id int, doc_id long, score double"
 
-# Σ df over a query's fetched terms below which search() scores on the
+# Estimated postings of a query below which _score_segments scores on the
 # driver (one pushed `term IN` collect, the same segment kernels in
-# process) instead of through the applyInPandas plan. Small queries pay
+# process) instead of through the applyInPandas plan. The estimate is
+# Σ df over the fetched terms for position-free kernels and Σ cf (every
+# position the kernel decodes) for positional ones. Small queries pay
 # the plan's fixed cost — exchange, Python worker, global top-k — many
-# times over their kernel time; the crossover measured at 10^5 and 10^6
-# postings is recorded in docs/PLANS.md.
+# times over their kernel time; the crossovers measured for both kinds
+# are recorded in docs/PLANS.md.
 DRIVER_POSTINGS_MAX = 1_000_000
 
 
@@ -236,8 +260,6 @@ def _score_postings(
     matching docs exhaustively — the block-max pruning θ-bound would need
     cursor-filtered seeds; exhaustive keeps it rank-safe.
     """
-    from elasticsearch_assets_spark.query.wand import restrict
-
     if not_terms:
         excluded = _merge_not_excluded(postings, not_terms, excluded)
     if after is not None:
@@ -336,40 +358,23 @@ def _score_optional_should(
     return pd.DataFrame({"doc_id": docs, "score": score})
 
 
-def _score_near(
-    postings, t1, t2, slop, ordered, distinct, idfs, avgdl, k1, b, k,
-    excluded, allowed,
+def _score_matched(
+    postings, match, terms, idfs, avgdl, k1, b, k, excluded, allowed,
+    groups=None,
 ) -> pd.DataFrame:
-    """`search_near`'s per-segment kernel: proximity match, then the
-    exact BM25 of the two terms, top-k."""
-    from elasticsearch_assets_spark.query.phrase import near_match
-    from elasticsearch_assets_spark.query.wand import restrict
-
-    docs = restrict(near_match(postings, t1, t2, slop, ordered), excluded, allowed)
-    score = exact_scores(docs, distinct, postings, idfs, avgdl, k1, b)
-    order = np.lexsort((docs, -score))[:k]
-    return pd.DataFrame({"doc_id": docs[order], "score": score[order]})
-
-
-def _score_phrase(
-    postings, toks, distinct, kept, idfs, avgdl, k1, b, k, excluded, allowed,
-) -> pd.DataFrame:
-    """`search_phrase`'s per-segment kernel: positional phrase match, then
-    the phrase terms' BM25 (plus the `kept` clause groups', ANDed)."""
-    from elasticsearch_assets_spark.query.phrase import phrase_match
-    from elasticsearch_assets_spark.query.wand import (
-        restrict,
-        topk_group_conjunctive,
-    )
-
-    docs = restrict(phrase_match(postings, toks), excluded, allowed)
-    if kept is not None:
+    """Every positional kernel (phrase, proximity, span, intervals): the
+    segment's docs that `match(postings)` returns, less tombstones and
+    restricted to `allowed`, ranked by the exact BM25 of `terms` and cut
+    at k — the engine's span-composition contract. `groups` (the phrase
+    path's clause conjuncts) instead ANDs ≥ 1 term of every group onto
+    the matched docs and scores every matched term, as search(groups=)."""
+    docs = restrict(match(postings), excluded, allowed)
+    if groups is not None:
         docs, score = topk_group_conjunctive(
-            [[t] for t in distinct] + kept, postings, idfs, avgdl, k1, b, k,
-            allowed=docs,
+            groups, postings, idfs, avgdl, k1, b, k, allowed=docs
         )
         return pd.DataFrame({"doc_id": docs, "score": score})
-    score = exact_scores(docs, distinct, postings, idfs, avgdl, k1, b)
+    score = exact_scores(docs, terms, postings, idfs, avgdl, k1, b)
     order = np.lexsort((docs, -score))[:k]
     return pd.DataFrame({"doc_id": docs[order], "score": score[order]})
 
@@ -395,7 +400,8 @@ class InvertedIndex:
         self.index_dir = index_dir
         self.meta: IndexMeta = load_meta(index_dir)
         self._driver_stats_rows = driver_stats_rows
-        self._stats_cache: dict[str, int] | None = None
+        # ({term: df}, {term: cf}) of the whole stats table, or None
+        self._stats_cache: tuple[dict, dict] | None = None
         # deletions: excluded before ranking; df/N/avgdl still include them
         # until compaction — the ES/Lucene deleted-docs contract
         self.tombstones: np.ndarray = load_tombstones(index_dir)
@@ -416,7 +422,7 @@ class InvertedIndex:
         from elasticsearch_assets_spark.index.tombstones import load_tombstones
 
         self.tombstones = load_tombstones(self.index_dir)
-        if self._layout_key() != getattr(self, "_meta_layout_key", None):
+        if self._layout_key() != self._meta_layout_key:
             self._refresh_after_compaction()
 
     def _layout_key(self):
@@ -518,12 +524,14 @@ class InvertedIndex:
             self._warm_segments = None
             self._warm_stats = None
 
-    def _maybe_cache_stats(self) -> dict[str, int] | None:
+    def _maybe_cache_stats(self) -> tuple[dict, dict] | None:
         if self._stats_cache is None and self._driver_stats_rows > 0:
             pdf = self.stats.limit(self._driver_stats_rows + 1).toPandas()
             if len(pdf) <= self._driver_stats_rows:
-                self._stats_cache = dict(
-                    zip(pdf["term"].tolist(), pdf["df"].astype(int).tolist())
+                terms = pdf["term"].tolist()
+                self._stats_cache = (
+                    dict(zip(terms, pdf["df"].astype(int).tolist())),
+                    dict(zip(terms, pdf["cf"].astype(int).tolist())),
                 )
             else:
                 self._driver_stats_rows = 0  # too big — stay distributed
@@ -533,9 +541,20 @@ class InvertedIndex:
         """Global df per term — driver-cached dict, or a ≤|terms|-row collect."""
         cache = self._maybe_cache_stats()
         if cache is not None:
-            return {t: cache[t] for t in terms if t in cache}
+            dfs = cache[0]
+            return {t: dfs[t] for t in terms if t in dfs}
         rows = self.stats.where(F.col("term").isin(terms)).collect()
         return {r["term"]: r["df"] for r in rows}
+
+    def _positions_estimate(self, terms: list[str]) -> int:
+        """Σ cf over `terms`: the positions a positional kernel decodes,
+        its placement estimate (see `_score_segments`)."""
+        cache = self._maybe_cache_stats()
+        if cache is not None:
+            cfs = cache[1]
+            return sum(cfs.get(t, 0) for t in terms)
+        rows = self.stats.where(F.col("term").isin(terms)).select("cf").collect()
+        return sum(r["cf"] for r in rows)
 
     def count_term(self, term: str) -> int:
         """F4 count-without-fetch: answered from the stats table, no scan."""
@@ -615,8 +634,9 @@ class InvertedIndex:
         self, query, k, mode, allowed, after, groups, min_should_match,
         boosts, must_not,
     ):
-        """`search`'s driver-side compile: (fetch terms, their term_stats,
-        the per-segment kernel), or None when no doc can match."""
+        """`search`'s driver-side compile: (fetch terms, the placement
+        estimate Σ df over them, the per-segment kernel), or None when no
+        doc can match."""
         if min_should_match is not None and (mode != "or" or groups is not None):
             raise ValueError("min_should_match applies to mode='or' flat queries")
         if groups is not None:
@@ -645,21 +665,24 @@ class InvertedIndex:
             allowed=allowed, after=after, groups=groups,
             min_should_match=min_should_match, not_terms=not_terms,
         )
-        return fetch, dfs, kernel
+        return fetch, sum(dfs.values()), kernel
 
     def _score_segments(
         self,
         fetch: list[str],
-        dfs: dict[str, int],
+        estimate: int,
         kernel,
         k: int | None,
         min_score: float | None = None,
     ) -> DataFrame:
         """Run a per-segment kernel ({term: TermPostings} -> (doc_id,
         score) frame) over the segment rows of `fetch`, then the global
-        (score DESC, doc_id ASC) top-k, placed by the estimated postings
-        Σ df over `fetch` (see `search`)."""
-        estimate = sum(dfs.get(t, 0) for t in fetch)
+        (score DESC, doc_id ASC) top-k. `estimate` is the caller's count
+        of the postings the kernels read — Σ df over `fetch`, or Σ cf
+        (`_positions_estimate`) for a kernel that decodes positions —
+        and places the work: below DRIVER_POSTINGS_MAX on the driver (a
+        local frame, computed when called), else distributed (see
+        `search`)."""
         trace = self._trace
         if trace is not None:
             trace["postings_estimate"] = estimate
@@ -704,6 +727,19 @@ class InvertedIndex:
             docs, scores = docs[keep], scores[keep]
         order = np.lexsort((docs, -scores))[:k]
         return docs[order], scores[order], len(rows)
+
+    def _compile_positional(
+        self, fetch, match, terms, idfs, k, allowed=None, groups=None
+    ):
+        """A positional query's (fetch, Σ cf estimate, kernel): the
+        `_score_matched` kernel over `match` (see there)."""
+        meta = self.meta
+        kernel = functools.partial(
+            _score_matched, match=match, terms=terms, idfs=idfs,
+            avgdl=meta.avgdl, k1=meta.k1, b=meta.b, k=k,
+            excluded=self.tombstones, allowed=allowed, groups=groups,
+        )
+        return fetch, self._positions_estimate(fetch), kernel
 
     def _per_segment(self, fetch: list[str], kernel) -> DataFrame:
         """The distributed placement of a per-segment kernel: the pushed
@@ -795,7 +831,7 @@ class InvertedIndex:
             excluded=self.tombstones, allowed=allowed,
             min_should_match=minimum_should_match, not_terms=not_terms,
         )
-        return fetch, dfs, kernel
+        return fetch, sum(dfs.values()), kernel
 
     def search_local(
         self,
@@ -846,7 +882,7 @@ class InvertedIndex:
         return self._driver_hits(fetch, kernel, k)
 
     def _driver_hits(self, fetch, kernel, k) -> list[tuple[int, float]]:
-        """`_driver_topk` as [(doc_id, score)] (the serving twins' result)."""
+        """`_driver_topk` as [(doc_id, score)] (the serving result)."""
         docs, scores, _ = self._driver_topk(fetch, kernel, k)
         return list(zip(docs.tolist(), scores.tolist()))
 
@@ -1334,8 +1370,8 @@ class InvertedIndex:
         subquery over the same decoded postings and combines PER
         SEGMENT — correct because doc-bucketed segments hold each doc's
         postings in exactly one segment, so per-segment subquery scores
-        ARE the global scores. The global merge is the usual
-        TakeOrderedAndProject. (The previous plan ran one distributed
+        ARE the global scores. Placed on the driver or distributed like
+        `search` (by Σ df). (The previous plan ran one distributed
         search per subquery + a hash-agg combine: N posting scans and an
         extra shuffle — at cluster scale each extra pass re-reads the
         postings, so the fused scan is the 100 TB shape. Results are
@@ -1357,13 +1393,9 @@ class InvertedIndex:
         tie = float(tie_breaker)
         and_mode = mode == "and"
 
-        def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            from elasticsearch_assets_spark.query.wand import (
-                _sorted_intersect,
-                restrict,
-            )
+        def kernel(postings: dict) -> pd.DataFrame:
+            from elasticsearch_assets_spark.query.wand import _sorted_intersect
 
-            postings = _postings_of(_segment_rows(pdf))
             per_sub: list[tuple[np.ndarray, np.ndarray]] = []
             for ts in sub_terms:
                 present = [t for t in ts if t in postings]
@@ -1396,20 +1428,12 @@ class InvertedIndex:
                 np.maximum.at(best, at, s)
                 total[at] += s
             score = best + tie * (total - best)
-            order = np.lexsort((union, -score))
-            if k is not None:
-                order = order[:k]
+            order = np.lexsort((union, -score))[:k]
             return pd.DataFrame(
                 {"doc_id": union[order], "score": score[order]}
             )
 
-        per_seg = (
-            self.segments.where(F.col("term").isin(all_terms))
-            .groupBy("seg_id")
-            .applyInPandas(score_fn, TOPK_SCHEMA)
-        )
-        out = per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        return out.limit(k) if k is not None else out
+        return self._score_segments(all_terms, sum(dfs.values()), kernel, k)
 
     def constant_score(
         self,
@@ -1860,34 +1884,15 @@ class InvertedIndex:
         `end` token positions (query/phrase.py span_first_match), scored
         BM25 on the term restricted to matching docs — the engine's
         span-composition contract (same as search_near/search_phrase)."""
-        from elasticsearch_assets_spark.query.phrase import span_first_match
-        from elasticsearch_assets_spark.query.wand import restrict
-
         prep = self._near_prep(term, term)
         if prep is None:
             return local_frame(self.spark, TOPK_SCHEMA)
         distinct, idfs = prep
-        meta = self.meta
-        avgdl, k1, b = meta.avgdl, meta.k1, meta.b
-        excluded = self.tombstones
-
-        def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = _postings_of(_segment_rows(pdf))
-            docs = restrict(
-                span_first_match(postings, term, end), excluded, allowed
-            )
-            score = exact_scores(docs, distinct, postings, idfs, avgdl, k1, b)
-            order = np.lexsort((docs, -score))
-            if k is not None:
-                order = order[:k]
-            return pd.DataFrame({"doc_id": docs[order], "score": score[order]})
-
-        per_seg = (
-            self.segments.where(F.col("term") == term)
-            .groupBy("seg_id")
-            .applyInPandas(score_fn, TOPK_SCHEMA)
+        q = self._compile_positional(
+            distinct, lambda postings: span_first_match(postings, term, end),
+            distinct, idfs, k, allowed,
         )
-        return _global_topk(per_seg, k)
+        return self._score_segments(*q, k)
 
     def search_span_not(
         self,
@@ -1903,9 +1908,6 @@ class InvertedIndex:
         before / `post` after it (query/phrase.py span_not_match). Scoring:
         BM25 on the include term restricted to matching docs. A missing
         exclude term matches every include doc (the span_not contract)."""
-        from elasticsearch_assets_spark.query.phrase import span_not_match
-        from elasticsearch_assets_spark.query.wand import restrict
-
         if not self.meta.positions:
             raise ValueError(
                 "index was built without positions=True — span queries "
@@ -1914,31 +1916,13 @@ class InvertedIndex:
         dfs = self.term_stats([include])
         if include not in dfs:
             return local_frame(self.spark, TOPK_SCHEMA)
-        meta = self.meta
-        idfs = {include: idf(meta.n_docs, dfs[include])}
-        avgdl, k1, b = meta.avgdl, meta.k1, meta.b
-        excluded = self.tombstones
-
-        def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = _postings_of(_segment_rows(pdf))
-            docs = restrict(
-                span_not_match(postings, include, exclude, pre, post),
-                excluded, allowed,
-            )
-            score = exact_scores(
-                docs, [include], postings, idfs, avgdl, k1, b
-            )
-            order = np.lexsort((docs, -score))
-            if k is not None:
-                order = order[:k]
-            return pd.DataFrame({"doc_id": docs[order], "score": score[order]})
-
-        per_seg = (
-            self.segments.where(F.col("term").isin([include, exclude]))
-            .groupBy("seg_id")
-            .applyInPandas(score_fn, TOPK_SCHEMA)
+        q = self._compile_positional(
+            sorted({include, exclude}),
+            lambda postings: span_not_match(postings, include, exclude, pre, post),
+            [include], {include: idf(self.meta.n_docs, dfs[include])}, k,
+            allowed,
         )
-        return _global_topk(per_seg, k)
+        return self._score_segments(*q, k)
 
     # -- delete_by_query (ES document API over the tombstone machinery) -------
 
@@ -2578,14 +2562,12 @@ class InvertedIndex:
     # -- span algebra + intervals ---------------------------------------------
 
     def _span_search(self, exprs: list, doc_fn, k: int | None) -> DataFrame:
-        """Shared distributed driver for span compositions: fetch the
-        involved terms' postings per segment (one pushed `term IN` scan),
-        let `doc_fn(postings) -> sorted doc ids` decide membership, score
+        """Shared executor call for span compositions: fetch the involved
+        terms' postings per segment (one pushed `term IN` scan), let
+        `doc_fn(postings) -> sorted doc ids` decide membership, score
         BM25 over the DISTINCT involved terms restricted to matching docs
         (the engine's span-composition contract, same as search_near /
-        search_phrase), merge via TakeOrderedAndProject."""
-        from elasticsearch_assets_spark.query.wand import restrict
-
+        search_phrase), then the global top-k."""
         if not self.meta.positions:
             raise ValueError(
                 "index was built without positions=True — span queries "
@@ -2593,26 +2575,10 @@ class InvertedIndex:
             )
         terms = sorted({t for e in exprs for t in _span_expr_terms(e)})
         dfs = self.term_stats(terms)
-        meta = self.meta
-        idfs = {t: idf(meta.n_docs, dfs.get(t, 0)) for t in terms}
-        avgdl, k1, b = meta.avgdl, meta.k1, meta.b
-        excluded = self.tombstones
-
-        def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = _postings_of(_segment_rows(pdf))
-            docs = restrict(doc_fn(postings), excluded, None)
-            score = exact_scores(docs, terms, postings, idfs, avgdl, k1, b)
-            order = np.lexsort((docs, -score))
-            if k is not None:
-                order = order[:k]
-            return pd.DataFrame({"doc_id": docs[order], "score": score[order]})
-
-        per_seg = (
-            self.segments.where(F.col("term").isin(terms))
-            .groupBy("seg_id")
-            .applyInPandas(score_fn, TOPK_SCHEMA)
-        )
-        return _global_topk(per_seg, k)
+        n_docs = self.meta.n_docs
+        idfs = {t: idf(n_docs, dfs.get(t, 0)) for t in terms}
+        q = self._compile_positional(terms, doc_fn, terms, idfs, k)
+        return self._score_segments(*q, k)
 
     def span_multi(
         self,
@@ -2764,7 +2730,6 @@ class InvertedIndex:
         field_masking_span score composition is undefined across
         fields)."""
         from elasticsearch_assets_spark.query.phrase import near_span_pairs
-        from elasticsearch_assets_spark.query.wand import restrict
 
         for idx, name in ((self, "primary"), (other, "masked")):
             if not idx.meta.positions:
@@ -3074,59 +3039,10 @@ class InvertedIndex:
 
     def termvectors(self, doc_id: int) -> DataFrame:
         """ES _termvectors API: every term of one document with its
-        within-doc tf and collection df — (term, tf, df) rows, term ASC.
-        A tombstoned doc returns zero rows.
-
-        Plan: the doc's segment resolves through the same durable seg_map
-        the cogrouped filter path uses, so the posting scan PRUNES to one
-        segment per chunk (falls back to a full segment scan only for
-        unmappable layouts); the decode emits only the doc's rows, then df
-        joins from the stats table (the termvector side is tiny — AQE
-        broadcasts it)."""
-        did = int(doc_id)
-        if bool(np.isin(did, self.tombstones).any()):
-            return local_frame(self.spark, "term string, tf long, df long")
-        ids = self.spark.createDataFrame([(did,)], "doc_id long")
-        seg_scan = self.segments
-        with_seg = self._filter_with_seg(ids)
-        if with_seg is not None:
-            # ≤ one seg per chunk — a bounded planning-level collect
-            sids = [
-                r["seg_id"]
-                for r in with_seg.select("seg_id").distinct().collect()
-            ]
-            if not sids:
-                return self.spark.createDataFrame(
-                    [], "term string, tf long, df long"
-                )
-            seg_scan = seg_scan.where(F.col("seg_id").isin(sids))
-
-        def tv_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = {"term": [], "tf": []}
-            for r in pdf.itertuples(index=False):  # per posting row
-                tp = TermPostings(r._asdict())
-                i = int(np.searchsorted(tp.doc_ids, did))
-                if i >= tp.doc_ids.size or tp.doc_ids[i] != did:
-                    continue
-                tfs, _ = tp.full()
-                out["term"].append(r.term)
-                out["tf"].append(int(tfs[i]))
-            return pd.DataFrame(out)
-
-        tv = (
-            seg_scan.groupBy("seg_id")
-            .applyInPandas(tv_fn, "term string, tf long")
-        )
-        return (
-            tv.join(
-                self.stats.select(
-                    "term", F.col("df").cast("long").alias("df")
-                ),
-                "term",
-                "left",
-            )
-            .orderBy(F.col("term").asc())
-        )
+        within-doc tf and collection df — (term, tf, df) rows, term ASC:
+        `mtermvectors([doc_id])` without its doc_id column. A tombstoned
+        or unknown doc returns zero rows."""
+        return self.mtermvectors([doc_id]).drop("doc_id")
 
     def mtermvectors(self, doc_ids: list[int]) -> DataFrame:
         """ES _mtermvectors: termvectors for M documents in ONE fused
@@ -3134,28 +3050,31 @@ class InvertedIndex:
         — every segment's postings decode once and emit rows for every
         requested live id, instead of M separate jobs. Tombstoned and
         unknown ids contribute no rows (the found=false contract).
-        Returns (doc_id, term, tf, df), (doc_id ASC, term ASC)."""
+        Returns (doc_id, term, tf, df), (doc_id ASC, term ASC).
+
+        Plan: the ids' segments resolve through the same durable seg_map
+        the cogrouped filter path uses, so the posting scan PRUNES to the
+        segments holding them (a full segment scan only for unmappable
+        layouts); the decode emits only the wanted docs' rows, then df
+        joins from the stats table (the termvector side is tiny — AQE
+        broadcasts it)."""
+        schema = "doc_id long, term string, tf long, df long"
         want = np.array(sorted({int(i) for i in doc_ids}), dtype=np.int64)
         if self.tombstones.size and want.size:
             want = want[~np.isin(want, self.tombstones)]
         if want.size == 0:
-            return self.spark.createDataFrame(
-                [], "doc_id long, term string, tf long, df long"
-            )
-        ids = self.spark.createDataFrame(
-            [(int(i),) for i in want], "doc_id long"
-        )
+            return local_frame(self.spark, schema)
+        ids = local_frame(self.spark, "doc_id long", {"doc_id": want})
         seg_scan = self.segments
         with_seg = self._filter_with_seg(ids)
         if with_seg is not None:
+            # ≤ one seg per chunk per id — a bounded planning-level collect
             sids = [
                 r["seg_id"]
                 for r in with_seg.select("seg_id").distinct().collect()
             ]
             if not sids:
-                return self.spark.createDataFrame(
-                    [], "doc_id long, term string, tf long, df long"
-                )
+                return local_frame(self.spark, schema)
             seg_scan = seg_scan.where(F.col("seg_id").isin(sids))
         want_local = want  # closure capture for the Arrow batches
 
@@ -3369,9 +3288,7 @@ class InvertedIndex:
         all with a `collate_match` column."""
         toks = tokenize(text)
         if not toks:
-            return self.spark.createDataFrame(
-                [], "suggestion string, score double"
-            )
+            return local_frame(self.spark, "suggestion string, score double")
         from elasticsearch_assets_spark.query.expand import fuzzy_condition
 
         n = float(self.meta.n_docs)
@@ -3559,41 +3476,20 @@ class InvertedIndex:
         index-assisted via positional postings: doc matches iff occurrences
         of the terms lie within `slop` positions (`ordered` requires t1
         before t2). Scores are the two-term AND scores restricted to
-        matching docs — same composition contract as search_phrase."""
+        matching docs — same composition contract as search_phrase.
+        Placed on the driver or distributed by Σ cf of the two terms."""
+        if t1 == t2:
+            raise ValueError("search_near needs two distinct terms")
         prep = self._near_prep(t1, t2)
         if prep is None:
             return local_frame(self.spark, TOPK_SCHEMA)
         distinct, idfs = prep
-        meta = self.meta
-        kernel = functools.partial(
-            _score_near, t1=t1, t2=t2, slop=slop, ordered=ordered,
-            distinct=distinct, idfs=idfs, avgdl=meta.avgdl, k1=meta.k1,
-            b=meta.b, k=k, excluded=self.tombstones, allowed=allowed,
+        q = self._compile_positional(
+            distinct,
+            lambda postings: near_match(postings, t1, t2, slop, ordered),
+            distinct, idfs, k, allowed,
         )
-        return _global_topk(self._per_segment(distinct, kernel), k)
-
-    def search_near_local(
-        self,
-        t1: str,
-        t2: str,
-        slop: int = 2,
-        ordered: bool = False,
-        k: int | None = 10,
-        allowed: "np.ndarray | None" = None,
-    ) -> list[tuple[int, float]]:
-        """Serving-path proximity search — identical results to
-        `search_near().collect()` (tested)."""
-        prep = self._near_prep(t1, t2)
-        if prep is None:
-            return []
-        distinct, idfs = prep
-        meta = self.meta
-        kernel = functools.partial(
-            _score_near, t1=t1, t2=t2, slop=slop, ordered=ordered,
-            distinct=distinct, idfs=idfs, avgdl=meta.avgdl, k1=meta.k1,
-            b=meta.b, k=k, excluded=self.tombstones, allowed=allowed,
-        )
-        return self._driver_hits(distinct, kernel, k)
+        return self._score_segments(*q, k)
 
     # -- query strings -------------------------------------------------------
 
@@ -3749,9 +3645,10 @@ class InvertedIndex:
         res = res.orderBy(F.col("score").desc(), F.col("doc_id").asc())
         return res.limit(k) if k is not None else res
 
-    def _phrase_prep(self, phrase, groups=None, boosts=None):
-        """Shared planning for the phrase paths: tokens, distinct terms,
-        idfs. Returns None when the result is provably empty.
+    def _compile_phrase(self, phrase, k, allowed, groups=None, boosts=None):
+        """The phrase paths' compile, shaped like `_compile_search`:
+        (fetch terms, Σ cf estimate, kernel), or None when the result is
+        provably empty.
 
         `groups` (extra clause-level scoring conjuncts, same semantics as
         `search(groups=...)`) widens the idf fetch to the group terms in the
@@ -3779,12 +3676,17 @@ class InvertedIndex:
             t: idf(meta.n_docs, dfs[t]) * (boosts or {}).get(t, 1.0)
             for t in dfs
         }
-        if groups is None:
-            return toks, distinct, idfs, None
-        kept = [[t for t in g if t in dfs] for g in groups]
-        if any(not g for g in kept):
-            return None  # an unsatisfiable AND clause
-        return toks, distinct, idfs, kept
+        all_groups = None
+        if groups is not None:
+            kept = [[t for t in g if t in dfs] for g in groups]
+            if any(not g for g in kept):
+                return None  # an unsatisfiable AND clause
+            all_groups = [[t] for t in distinct] + kept
+        return self._compile_positional(
+            sorted(dfs),  # the phrase terms and the kept group terms
+            lambda postings: phrase_match(postings, toks),
+            distinct, idfs, k, allowed, all_groups,
+        )
 
     def search_phrase(
         self,
@@ -3797,7 +3699,8 @@ class InvertedIndex:
         """Top-k BM25 among docs containing the EXACT consecutive token
         sequence (index-assisted: positional postings, no text scan — see
         query/phrase.py). Scores are the AND-query scores restricted to
-        phrase-matching docs; ordering contract matches `search`.
+        phrase-matching docs; ordering contract matches `search`. Placed
+        on the driver or distributed by Σ cf of the fetched terms.
 
         `groups` (Lucene BooleanQuery: `"big deal" AND spark AND jo*`)
         ANDs clause-level scoring conjuncts onto the phrase: a doc must
@@ -3806,18 +3709,10 @@ class InvertedIndex:
         `search(groups=...)`'s scoring contract restricted to
         phrase-matching docs. groups=None is bit-identical to the plain
         phrase kernel (tested)."""
-        prep = self._phrase_prep(phrase, groups, boosts)
-        if prep is None:
+        q = self._compile_phrase(phrase, k, allowed, groups, boosts)
+        if q is None:
             return local_frame(self.spark, TOPK_SCHEMA)
-        toks, distinct, idfs, kept = prep
-        meta = self.meta
-        kernel = functools.partial(
-            _score_phrase, toks=toks, distinct=distinct, kept=kept, idfs=idfs,
-            avgdl=meta.avgdl, k1=meta.k1, b=meta.b, k=k,
-            excluded=self.tombstones, allowed=allowed,
-        )
-        fetch = sorted(set(distinct) | {t for g in (kept or []) for t in g})
-        return _global_topk(self._per_segment(fetch, kernel), k)
+        return self._score_segments(*q, k)
 
     def search_phrase_filtered(
         self,
@@ -3840,71 +3735,14 @@ class InvertedIndex:
         join. All rank-identical (tested). `groups` ANDs clause-level
         scoring conjuncts onto the phrase (see search_phrase) — the full
         `"phrase" AND clauses AND filter` query-string composition."""
-        from elasticsearch_assets_spark.query.phrase import phrase_match
-        from elasticsearch_assets_spark.query.wand import (
-            restrict,
-            topk_group_conjunctive,
-        )
-
-        prep = self._phrase_prep(phrase, groups, boosts)
-        if prep is None:
+        q = self._compile_phrase(phrase, k, None, groups, boosts)
+        if q is None:
             return local_frame(self.spark, TOPK_SCHEMA)
-        toks, distinct, idfs, kept = prep
-        fetch = sorted(set(distinct) | {t for g in (kept or []) for t in g})
         ids = filtered.select(F.col(id_col).cast("long").alias("doc_id"))
         if strategy in ("auto", "cogroup"):
             with_seg = self._filter_with_seg(ids)
             if with_seg is not None:
-                meta = self.meta
-                avgdl, k1, b = meta.avgdl, meta.k1, meta.b
-                excluded = self.tombstones
-
-                def score_fn(
-                    left: pd.DataFrame, right: pd.DataFrame
-                ) -> pd.DataFrame:
-                    if len(left) == 0 or len(right) == 0:
-                        return pd.DataFrame(
-                            {"doc_id": [], "score": []}
-                        ).astype({"doc_id": "int64", "score": "float64"})
-                    allowed = np.unique(right["doc_id"].to_numpy(np.int64))
-                    postings = {
-                        row["term"]: TermPostings(row)
-                        for row in (
-                            t._asdict() for t in left.itertuples(index=False)
-                        )
-                    }
-                    docs = restrict(
-                        phrase_match(postings, toks), excluded, allowed
-                    )
-                    if kept is not None:
-                        allg = [[t] for t in distinct] + kept
-                        docs, score = topk_group_conjunctive(
-                            allg, postings, idfs, avgdl, k1, b, k,
-                            allowed=docs,
-                        )
-                        return pd.DataFrame(
-                            {"doc_id": docs, "score": score}
-                        )
-                    score = exact_scores(
-                        docs, distinct, postings, idfs, avgdl, k1, b
-                    )
-                    order = np.lexsort((docs, -score))
-                    if k is not None:
-                        order = order[:k]
-                    return pd.DataFrame(
-                        {"doc_id": docs[order], "score": score[order]}
-                    )
-
-                per_seg = (
-                    self.segments.where(F.col("term").isin(fetch))
-                    .groupBy("seg_id")
-                    .cogroup(with_seg.groupBy("seg_id"))
-                    .applyInPandas(score_fn, TOPK_SCHEMA)
-                )
-                ordered = per_seg.orderBy(
-                    F.col("score").desc(), F.col("doc_id").asc()
-                )
-                return ordered.limit(k) if k is not None else ordered
+                return self._cogrouped(q[0], q[2], with_seg, k)
             if strategy == "cogroup":
                 raise ValueError(
                     "doc->segment mapping unavailable (meta.partitioning="
@@ -3923,30 +3761,6 @@ class InvertedIndex:
         out = scored.join(ids.distinct(), "doc_id", "left_semi")
         out = out.orderBy(F.col("score").desc(), F.col("doc_id").asc())
         return out.limit(k) if k is not None else out
-
-    def search_phrase_local(
-        self,
-        phrase: str | list[str],
-        k: int | None = 10,
-        allowed: "np.ndarray | None" = None,
-        groups: list[list[str]] | None = None,
-        boosts: dict[str, float] | None = None,
-    ) -> list[tuple[int, float]]:
-        """Serving-path phrase search: one pushed-down posting collect, then
-        the same kernels on the driver — identical to
-        `search_phrase().collect()` (tested)."""
-        prep = self._phrase_prep(phrase, groups, boosts)
-        if prep is None:
-            return []
-        toks, distinct, idfs, kept = prep
-        meta = self.meta
-        kernel = functools.partial(
-            _score_phrase, toks=toks, distinct=distinct, kept=kept, idfs=idfs,
-            avgdl=meta.avgdl, k1=meta.k1, b=meta.b, k=k,
-            excluded=self.tombstones, allowed=allowed,
-        )
-        fetch = sorted(set(distinct) | {t for g in (kept or []) for t in g})
-        return self._driver_hits(fetch, kernel, k)
 
     def search_phrase_prefix(
         self,
@@ -3967,9 +3781,6 @@ class InvertedIndex:
         expansions contribute wherever they occur, the scoring_boolean
         shape shared with search_prefix. A single-token phrase degenerates
         to search_prefix (the ES contract)."""
-        from elasticsearch_assets_spark.query.phrase import phrase_prefix_match
-        from elasticsearch_assets_spark.query.wand import restrict
-
         toks = tokenize(phrase) if isinstance(phrase, str) else list(phrase)
         if not toks:
             return local_frame(self.spark, TOPK_SCHEMA)
@@ -3990,29 +3801,13 @@ class InvertedIndex:
         if any(t not in dfs for t in distinct_fixed):
             return local_frame(self.spark, TOPK_SCHEMA)
         terms = sorted(t for t in all_terms if t in dfs)
-        meta = self.meta
-        idfs = {t: idf(meta.n_docs, dfs[t]) for t in terms}
-        avgdl, k1, b = meta.avgdl, meta.k1, meta.b
-        excluded = self.tombstones
-
-        def score_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            postings = _postings_of(_segment_rows(pdf))
-            docs = restrict(
-                phrase_prefix_match(postings, fixed, expansions),
-                excluded, allowed,
-            )
-            score = exact_scores(docs, terms, postings, idfs, avgdl, k1, b)
-            order = np.lexsort((docs, -score))
-            if k is not None:
-                order = order[:k]
-            return pd.DataFrame({"doc_id": docs[order], "score": score[order]})
-
-        per_seg = (
-            self.segments.where(F.col("term").isin(terms))
-            .groupBy("seg_id")
-            .applyInPandas(score_fn, TOPK_SCHEMA)
+        n_docs = self.meta.n_docs
+        q = self._compile_positional(
+            terms,
+            lambda postings: phrase_prefix_match(postings, fixed, expansions),
+            terms, {t: idf(n_docs, dfs[t]) for t in terms}, k, allowed,
         )
-        return _global_topk(per_seg, k)
+        return self._score_segments(*q, k)
 
     def _filter_with_seg(self, ids: DataFrame) -> DataFrame | None:
         """Map a filter-id DataFrame to (seg_id, doc_id) executor-side.
@@ -4130,11 +3925,18 @@ class InvertedIndex:
         if strategy in ("auto", "cogroup"):
             with_seg = self._filter_with_seg(ids)
             if with_seg is not None:
-                return self._search_cogrouped(
-                    query, with_seg, k=k, mode=mode, groups=groups,
-                    boosts=boosts, min_should_match=min_should_match,
-                    opt_should=opt_should, opt_msm=opt_msm,
-                )
+                if opt_should is not None:
+                    q = self._compile_optional_should(
+                        query, opt_should, k, opt_msm, None, groups, None
+                    )
+                else:
+                    q = self._compile_search(
+                        query, k, mode, None, None, groups, min_should_match,
+                        boosts, None,
+                    )
+                if q is None:
+                    return local_frame(self.spark, TOPK_SCHEMA)
+                return self._cogrouped(q[0], q[2], with_seg, k)
             if strategy == "cogroup":
                 raise ValueError(
                     "doc->segment mapping unavailable (meta.partitioning="
@@ -4170,53 +3972,14 @@ class InvertedIndex:
         out = out.orderBy(F.col("score").desc(), F.col("doc_id").asc())
         return out.limit(k) if k is not None else out
 
-    def _search_cogrouped(
-        self,
-        query: str | list[str],
-        ids_with_seg: DataFrame,
-        k: int | None,
-        mode: str,
-        groups: list[list[str]] | None = None,
-        boosts: dict[str, float] | None = None,
-        min_should_match: int | None = None,
-        opt_should: "list[tuple[list[str], float]] | None" = None,
-        opt_msm: int = 0,
+    def _cogrouped(
+        self, fetch: list[str], kernel, ids_with_seg: DataFrame, k: int | None
     ) -> DataFrame:
-        """Distributed filtered search: per segment, cogroup (posting rows,
-        allowed doc ids) and run the same scoring kernels restricted to the
-        allowed set — rank-identical to the broadcast path (tested). The
-        shuffle moves only the filter ids (8 B each) keyed by segment; the
-        posting side is the usual pushed-down `term IN` scan.
-        `opt_should` routes to the optional-should kernel (query/groups =
-        the must side; clause postings ride the same pushed scan)."""
-        if groups is not None:
-            terms = sorted({t for g in groups for t in g})
-        else:
-            terms = sorted(set(tokenize(query) if isinstance(query, str) else query))
-        if not terms:
-            return local_frame(self.spark, TOPK_SCHEMA)
-        opt_terms = sorted(
-            {t for ts, _ in (opt_should or []) for t in ts} - set(terms)
-        )
-        dfs = self.term_stats(sorted(set(terms) | set(opt_terms)))
-        if mode == "and":
-            if groups is not None:
-                if any(all(t not in dfs for t in g) for g in groups):
-                    return local_frame(self.spark, TOPK_SCHEMA)
-            elif any(t not in dfs for t in terms):
-                return local_frame(self.spark, TOPK_SCHEMA)
-        meta = self.meta
-        idfs = {
-            t: idf(meta.n_docs, dfs.get(t, 0)) * (boosts or {}).get(t, 1.0)
-            for t in sorted(set(terms) | set(opt_terms))
-        }
-        avgdl, k1, b = meta.avgdl, meta.k1, meta.b
-        excluded = self.tombstones
-        must_groups = (
-            None if opt_should is None
-            else ([sorted(set(g)) for g in groups] if groups is not None
-                  else [[t] for t in terms])
-        )
+        """The filtered executor: per segment, cogroup (posting rows of
+        `fetch`, allowed doc ids) and call the compiled kernel with that
+        segment's ids as `allowed` — rank-identical to the broadcast path
+        (tested). The shuffle moves only the filter ids (8 B each) keyed
+        by segment; the posting side is the usual pushed `term IN` scan."""
 
         def score_fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             if len(left) == 0 or len(right) == 0:
@@ -4224,21 +3987,11 @@ class InvertedIndex:
                     {"doc_id": "int64", "score": "float64"}
                 )
             allowed = np.unique(right["doc_id"].to_numpy(np.int64))
-            if opt_should is not None:
-                return _score_optional_should(
-                    _postings_of(_segment_rows(left)), must_groups, opt_should,
-                    idfs, avgdl, k1, b, k, excluded, allowed, opt_msm,
-                )
-            return _score_postings(
-                _postings_of(_segment_rows(left)), terms, idfs, avgdl, k1, b,
-                mode, k, excluded, allowed, None, groups, min_should_match,
-            )
+            return kernel(_postings_of(_segment_rows(left)), allowed=allowed)
 
-        posts = self.segments.where(
-            F.col("term").isin(sorted(set(terms) | set(opt_terms)))
-        )
         per_seg = (
-            posts.groupBy("seg_id")
+            self.segments.where(F.col("term").isin(fetch))
+            .groupBy("seg_id")
             .cogroup(ids_with_seg.groupBy("seg_id"))
             .applyInPandas(score_fn, TOPK_SCHEMA)
         )
@@ -4820,8 +4573,6 @@ class PinnedIndex(InvertedIndex):
     def __init__(self, base: InvertedIndex):
         import uuid
 
-        from elasticsearch_assets_spark.index.tombstones import load_tombstones
-
         self.pit_dir = os.path.join(
             base.index_dir, "pits", uuid.uuid4().hex[:12]
         )
@@ -4834,12 +4585,8 @@ class PinnedIndex(InvertedIndex):
         # may have been remapped by a compaction (silently wrong routing —
         # the bug this clone design fixed).
         clone_index_files(base.index_dir, self.pit_dir)
-        self.spark = base.spark
-        self.index_dir = self.pit_dir  # all inherited paths read the clone
-        self.meta = load_meta(self.pit_dir)
-        self._driver_stats_rows = base._driver_stats_rows
-        self._stats_cache = None
-        self.tombstones = load_tombstones(self.pit_dir)
+        # all inherited paths read the clone
+        super().__init__(base.spark, self.pit_dir, base._driver_stats_rows)
         self._aliases = dict(base._aliases)
 
     def close(self) -> None:

@@ -30,13 +30,21 @@ SF = "/root/testdata/sf0.01"
 
 PLACEMENT_NOTE = """## Search placement: driver below DRIVER_POSTINGS_MAX, distributed above
 
-`InvertedIndex.search()` and `search_optional_should()` estimate a query's
-postings as the sum of df over the fetched terms, must_not terms included.
-Below `engine.DRIVER_POSTINGS_MAX` (1,000,000) one pushed `term IN` scan is
-collected and the segment kernels run on the driver; the result is a
-LocalTableScan, so its collect() runs no Spark job. At or above it the
-applyInPandas plan runs. This audit forces the distributed placement, so
-the search plans below are the ones large queries take.
+Every single-index top-k kernel runs through one executor,
+`InvertedIndex._score_segments`, which estimates the query's postings from
+the stats it already took. Position-free kernels (`search()`,
+`search_optional_should()`, `dis_max`) use the sum of df over the fetched
+terms, must_not terms included. Kernels that decode positions (phrase,
+phrase_prefix, near, span_first, span_not, span_or / containing / within /
+near, intervals) use the sum of cf over the fetched terms: every position
+of every fetched posting is decoded. Below `engine.DRIVER_POSTINGS_MAX`
+(1,000,000, one constant for both) one pushed `term IN` scan is collected
+and the segment kernels run on the driver; the result is a LocalTableScan,
+so its collect() runs no Spark job. At or above it the applyInPandas plan
+runs. Filtered search (`search_filtered`, `search_phrase_filtered`, the
+cogroup strategy) always runs distributed. This audit forces the
+distributed placement, so the search plans below are the ones large
+queries take.
 
 The cap is the measured crossover of `search(terms, k=10, mode="or")
 .collect()`: `pages_df` indexes with 16 segments, head-term OR queries,
@@ -59,6 +67,33 @@ interleaved runs per placement.
 The two placements meet near 1.1M postings. The driver side is one
 Python process whatever the cluster size, while the distributed side gains
 executor cores, so on a larger cluster the crossover moves down, not up.
+
+Positional kernels cross over earlier in postings, because the driver also
+decodes every position on one core. Measured the same way with
+`search_phrase(phrase, k=10).collect()` on `positions=True` indexes
+(results asserted equal between the placements):
+
+| docs | phrase | sum of df | sum of cf | driver ms | distributed ms | driver / distributed | placed |
+|---|---|---|---|---|---|---|---|
+| 100k | `spark query` | 184,517 | 689,638 | 370 | 751 | 0.49 | driver |
+| 100k | `index join scan filter` | 325,129 | 836,156 | 320 | 652 | 0.49 | driver |
+| 100k | `the data` | 195,802 | 1,276,515 | 370 | 601 | 0.61 | distributed |
+| 100k | 8 head terms | 705,448 | 2,802,309 | 619 | 642 | 0.97 | distributed |
+| 400k | `term0000 term0001` | 217,471 | 288,398 | 547 | 886 | 0.62 | driver |
+| 400k | `slow small` | 351,961 | 545,012 | 545 | 896 | 0.61 | driver |
+| 400k | `slow small large` | 518,009 | 800,772 | 581 | 706 | 0.82 | driver |
+| 400k | 6 mid head terms | 1,053,071 | 1,644,331 | 820 | 866 | 0.95 | distributed |
+| 400k | `spark query` | 721,572 | 2,758,401 | 982 | 999 | 0.98 | distributed |
+| 400k | `the data` | 774,502 | 5,106,771 | 1,431 | 981 | 1.46 | distributed |
+
+8 head terms: `the data spark query index join scan filter`; 6 mid head
+terms: `value fast slow small large window`.
+
+Under the sum-of-cf rule every query placed on the driver ran at 0.49-0.82
+of its distributed time. A sum-of-df rule would have put `the data` at
+400k docs (sum of df 0.77M) on the driver, 1.46x slower. The rule is
+conservative above the cap: a few distributed-placed phrases (0.61-0.98)
+would still have been faster on the driver.
 """
 
 
@@ -79,9 +114,10 @@ def main() -> None:
     if not os.path.exists(os.path.join(idx_dir, "meta.json")):
         build_index(spark, docs, idx_dir, num_segments=8)
     idx = InvertedIndex(spark, idx_dir)
-    # audit the distributed placement of search(), the plan every query
-    # above DRIVER_POSTINGS_MAX takes; at this index size each query would
-    # otherwise be scored on the driver and plan as a LocalTableScan
+    # audit the distributed placement of the segment executor, the plan
+    # every query above DRIVER_POSTINGS_MAX takes; at this index size each
+    # query would otherwise be scored on the driver and plan as a
+    # LocalTableScan
     engine.DRIVER_POSTINGS_MAX = 0
 
     sections = []

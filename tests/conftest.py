@@ -35,3 +35,16 @@ def distributed(monkeypatch):
     rank-identity tests compare search_local (always the driver
     placement) against it."""
     return _force_placement(monkeypatch, "distributed")
+
+
+@pytest.fixture
+def both_placements(monkeypatch):
+    """`for _ in both_placements():` runs a test body under the driver
+    and then the distributed placement of the segment executor, keeping
+    one test id (the oracle tests of the folded kernels check both)."""
+
+    def each():
+        for name in ("driver", "distributed"):
+            yield _force_placement(monkeypatch, name)
+
+    return each

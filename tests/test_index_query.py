@@ -183,6 +183,19 @@ def test_search_filtered_composition(index, spark):
     assert [(r["doc_id"], r["score"]) for r in slow.collect()] == want
 
 
+@pytest.mark.parametrize("strategy", ["cogroup", "broadcast", "exhaustive"])
+def test_search_filtered_optional_should_needs_must(index, spark, strategy):
+    """An optional-should bool without must terms is refused the same way
+    by every filtered strategy (the cogroup path compiles through
+    search_optional_should's compile like the other two)."""
+    filtered_df = spark.range(0, 100).withColumnRenamed("id", "doc_id")
+    with pytest.raises(ValueError, match="needs must terms"):
+        index.search_filtered(
+            [], filtered_df, k=5, strategy=strategy,
+            opt_should=[(["spark"], 1.0)],
+        ).collect()
+
+
 def test_search_filtered_cogroup_single_chunk(spark, tmp_path, corpus_pdf):
     """Cogroup path on a single-chunk index (trivial seg mapping) + filter
     ids that are absent from the index (harmless) + tombstone interaction."""

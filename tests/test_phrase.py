@@ -40,21 +40,28 @@ def _truth(corpus, phrase: list[str]) -> list[int]:
     )
 
 
-def test_phrase_matches_bruteforce(spark, corpus, pos_index):
-    for ph in ("the join", "data spark"):
-        got = sorted(
-            r["doc_id"] for r in pos_index.search_phrase(ph, k=None).collect()
-        )
-        want = _truth(corpus, ph.split())
-        assert got == want and len(want) > 0, ph
+def test_phrase_matches_bruteforce(spark, corpus, pos_index, both_placements):
+    for _ in both_placements():
+        for ph in ("the join", "data spark"):
+            got = sorted(
+                r["doc_id"] for r in pos_index.search_phrase(ph, k=None).collect()
+            )
+            want = _truth(corpus, ph.split())
+            assert got == want and len(want) > 0, ph
 
 
-def test_phrase_local_parity_and_topk(spark, corpus, pos_index):
-    res = pos_index.search_phrase("the join", k=10).collect()
-    loc = pos_index.search_phrase_local("the join", k=10)
-    assert [(r["doc_id"], r["score"]) for r in res] == loc
-    assert len(res) == 10
-    scores = [r["score"] for r in res]
+def test_phrase_local_parity_and_topk(
+    spark, corpus, pos_index, both_placements
+):
+    loc, dist = [
+        [(r["doc_id"], r["score"]) for r in pos_index.search_phrase(
+            "the join", k=10
+        ).collect()]
+        for _ in both_placements()
+    ]
+    assert loc == dist
+    assert len(dist) == 10
+    scores = [s for _, s in dist]
     assert scores == sorted(scores, reverse=True)
 
 

@@ -1,6 +1,7 @@
-"""search() placement: below DRIVER_POSTINGS_MAX estimated postings the
-segment kernels run on the driver and the result is a job-free local
-frame; above it the applyInPandas plan runs. Both give identical pages."""
+"""Segment-executor placement: below DRIVER_POSTINGS_MAX estimated
+postings (Σ df, or Σ cf for positional kernels) the segment kernels run
+on the driver and the result is a job-free local frame; above it the
+applyInPandas plan runs. Both give identical pages."""
 
 from __future__ import annotations
 
@@ -45,6 +46,16 @@ def idx(spark, index_dir, deleted):
     return InvertedIndex(spark, index_dir)
 
 
+@pytest.fixture(scope="module")
+def pos_idx(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("placement_pos"))
+    build_index(
+        spark, pages_df(spark, 600, partitions=4), d, num_segments=6,
+        num_chunks=2, positions=True,
+    )
+    return InvertedIndex(spark, d)
+
+
 def _pairs(frame):
     return [(r["doc_id"], r["score"]) for r in frame.collect()]
 
@@ -85,6 +96,41 @@ def test_query_above_cap_plans_flatmapgroups(idx, monkeypatch):
 
     above, dist = plan_of(estimate)
     below, local = plan_of(estimate + 1)
+    assert "FlatMapGroupsInPandas" in above
+    assert "LocalTableScan" in below and "FlatMapGroupsInPandas" not in below
+    assert dist == local and len(local) == 5
+
+
+def test_driver_placed_phrase_collect_runs_no_spark_job(spark, pos_idx):
+    sc = spark.sparkContext
+    frame = pos_idx.search_phrase("the join", k=5)
+    assert "LocalTableScan" in frame._jdf.queryExecution().executedPlan().toString()
+    assert _jobs_of(sc, "placement-driver-phrase", frame.collect) == []
+    assert len(_pairs(frame)) == 5
+
+
+def test_positional_query_is_placed_by_collection_frequency(
+    pos_idx, monkeypatch
+):
+    """A phrase decodes every position of its terms, so its estimate is
+    Σ cf, not Σ df: with Σ df < cap ≤ Σ cf it still runs distributed."""
+    from pyspark.sql import functions as F
+
+    terms = ["join", "the"]
+    sums = (
+        pos_idx.stats.where(F.col("term").isin(terms))
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .first()
+    )
+    assert sums["df"] < sums["cf"]
+
+    def plan_of(cap):
+        monkeypatch.setattr(engine, "DRIVER_POSTINGS_MAX", cap)
+        frame = pos_idx.search_phrase("the join", k=5)
+        return frame._jdf.queryExecution().executedPlan().toString(), _pairs(frame)
+
+    above, dist = plan_of(sums["cf"])
+    below, local = plan_of(sums["cf"] + 1)
     assert "FlatMapGroupsInPandas" in above
     assert "LocalTableScan" in below and "FlatMapGroupsInPandas" not in below
     assert dist == local and len(local) == 5

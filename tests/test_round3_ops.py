@@ -170,15 +170,18 @@ def _near_truth(corpus, t1, t2, slop, ordered):
 
 
 @pytest.mark.parametrize("ordered", [False, True])
-def test_near_matches_bruteforce(spark, corpus, pos_index, ordered):
-    got = sorted(
-        r["doc_id"]
-        for r in pos_index.search_near(
-            "the", "join", slop=3, ordered=ordered, k=None
-        ).collect()
-    )
-    want = _near_truth(corpus, "the", "join", 3, ordered)
-    assert got == want and want
+def test_near_matches_bruteforce(
+    spark, corpus, pos_index, ordered, both_placements
+):
+    for _ in both_placements():
+        got = sorted(
+            r["doc_id"]
+            for r in pos_index.search_near(
+                "the", "join", slop=3, ordered=ordered, k=None
+            ).collect()
+        )
+        want = _near_truth(corpus, "the", "join", 3, ordered)
+        assert got == want and want
 
 
 def test_near_slop_zero_is_empty_and_one_is_adjacent(corpus, pos_index):
@@ -193,17 +196,22 @@ def test_near_slop_zero_is_empty_and_one_is_adjacent(corpus, pos_index):
     assert got == _near_truth(corpus, "the", "join", 1, True)
 
 
-def test_near_local_parity(pos_index):
-    dist = pos_index.search_near("the", "join", slop=3, k=10).collect()
-    loc = pos_index.search_near_local("the", "join", slop=3, k=10)
-    assert [(r["doc_id"], r["score"]) for r in dist] == loc and loc
+def test_near_local_parity(pos_index, both_placements):
+    loc, dist = [
+        pos_index.search_near("the", "join", slop=3, k=10).collect()
+        for _ in both_placements()
+    ]
+    assert loc == dist and loc
 
 
-def test_near_requires_positions_and_distinct_terms(index, pos_index):
-    with pytest.raises(ValueError, match="positions"):
-        index.search_near("spark", "join", slop=2)
-    with pytest.raises(ValueError, match="distinct"):
-        pos_index.search_near_local("spark", "spark", slop=2)
+def test_near_requires_positions_and_distinct_terms(
+    index, pos_index, both_placements
+):
+    for _ in both_placements():
+        with pytest.raises(ValueError, match="positions"):
+            index.search_near("spark", "join", slop=2)
+        with pytest.raises(ValueError, match="distinct"):
+            pos_index.search_near("spark", "spark", slop=2)
 
 
 # ---------------------------------------------------------------------------

@@ -245,12 +245,13 @@ def _phrase_prefix_truth(corpus, fixed, prefix):
     return sorted(out)
 
 
-def test_phrase_prefix_matches_bruteforce(corpus, pos_index):
-    got = sorted(
-        r["doc_id"]
-        for r in pos_index.search_phrase_prefix(["the", "s"], k=None).collect()
-    )
-    assert got == _phrase_prefix_truth(corpus, ["the"], "s") and got
+def test_phrase_prefix_matches_bruteforce(corpus, pos_index, both_placements):
+    for _ in both_placements():
+        got = sorted(
+            r["doc_id"]
+            for r in pos_index.search_phrase_prefix(["the", "s"], k=None).collect()
+        )
+        assert got == _phrase_prefix_truth(corpus, ["the"], "s") and got
 
 
 def test_phrase_prefix_multi_fixed(corpus, pos_index):

@@ -80,15 +80,18 @@ def test_boosting_validates_negative_boost(index):
 # ---------------------------------------------------------------------------
 
 
-def test_span_first_matches_leading_positions(pos_index, doc_tokens):
-    end = 4
-    got = {d for d, _ in _pairs(pos_index.search_span_first("spark", end, k=None))}
-    want = {d for d, toks in doc_tokens.items() if "spark" in toks[:end]}
-    assert got == want
-    # scores equal the single-term scores restricted to the match set
-    base = dict(_pairs(pos_index.search(["spark"], k=None)))
-    for d, s in _pairs(pos_index.search_span_first("spark", end, k=None)):
-        assert s == pytest.approx(base[d])
+def test_span_first_matches_leading_positions(
+    pos_index, doc_tokens, both_placements
+):
+    for _ in both_placements():
+        end = 4
+        got = {d for d, _ in _pairs(pos_index.search_span_first("spark", end, k=None))}
+        want = {d for d, toks in doc_tokens.items() if "spark" in toks[:end]}
+        assert got == want
+        # scores equal the single-term scores restricted to the match set
+        base = dict(_pairs(pos_index.search(["spark"], k=None)))
+        for d, s in _pairs(pos_index.search_span_first("spark", end, k=None)):
+            assert s == pytest.approx(base[d])
 
 
 def test_span_first_edge_cases(pos_index, index):
@@ -98,22 +101,23 @@ def test_span_first_edge_cases(pos_index, index):
         index.search_span_first("spark", 3)  # non-positional index
 
 
-def test_span_not_window_semantics(pos_index, doc_tokens):
-    pre = post = 2
-    got = {
-        d for d, _ in _pairs(
-            pos_index.search_span_not("spark", "join", pre=pre, post=post, k=None)
-        )
-    }
-    want = set()
-    for d, toks in doc_tokens.items():
-        inc = [i for i, t in enumerate(toks) if t == "spark"]
-        exc = [i for i, t in enumerate(toks) if t == "join"]
-        if any(
-            all(not (p - pre <= q <= p + post) for q in exc) for p in inc
-        ):
-            want.add(d)
-    assert got == want
+def test_span_not_window_semantics(pos_index, doc_tokens, both_placements):
+    for _ in both_placements():
+        pre = post = 2
+        got = {
+            d for d, _ in _pairs(
+                pos_index.search_span_not("spark", "join", pre=pre, post=post, k=None)
+            )
+        }
+        want = set()
+        for d, toks in doc_tokens.items():
+            inc = [i for i, t in enumerate(toks) if t == "spark"]
+            exc = [i for i, t in enumerate(toks) if t == "join"]
+            if any(
+                all(not (p - pre <= q <= p + post) for q in exc) for p in inc
+            ):
+                want.add(d)
+        assert got == want
 
 
 def test_span_not_missing_exclude_is_plain_match(pos_index):

@@ -619,21 +619,22 @@ def _pick_near_terms(doc_tokens, slop):
     pytest.skip("no co-occurring term pair in the synthetic corpus")
 
 
-def test_span_or_brute(pos_index, doc_tokens):
-    t1, t2 = _pick_near_terms(doc_tokens, 4)
-    t3 = _common_term(doc_tokens, 6)
-    got = {
-        r["doc_id"]
-        for r in pos_index.search_span_or(
-            [("near", t1, t2, 4, True), ("term", t3)], k=None
-        ).collect()
-    }
-    want = {
-        d
-        for d, toks in doc_tokens.items()
-        if _near_pairs_py(toks, t1, t2, 4, True) or t3 in toks
-    }
-    assert got == want
+def test_span_or_brute(pos_index, doc_tokens, both_placements):
+    for _ in both_placements():
+        t1, t2 = _pick_near_terms(doc_tokens, 4)
+        t3 = _common_term(doc_tokens, 6)
+        got = {
+            r["doc_id"]
+            for r in pos_index.search_span_or(
+                [("near", t1, t2, 4, True), ("term", t3)], k=None
+            ).collect()
+        }
+        want = {
+            d
+            for d, toks in doc_tokens.items()
+            if _near_pairs_py(toks, t1, t2, 4, True) or t3 in toks
+        }
+        assert got == want
 
 
 def test_span_containing_and_within_brute(pos_index, doc_tokens):
@@ -702,7 +703,9 @@ def test_span_kernels_emit_different_spans(doc_tokens):
         span_containing_spans(big, big)  # little must be width 1
 
 
-def test_intervals_brute_and_phrase_degeneration(pos_index, doc_tokens, corpus):
+def test_intervals_brute_and_phrase_degeneration(
+    pos_index, doc_tokens, corpus, both_placements
+):
     from collections import Counter
 
     c = Counter(t for toks in doc_tokens.values() for t in set(toks))
@@ -730,18 +733,19 @@ def test_intervals_brute_and_phrase_degeneration(pos_index, doc_tokens, corpus):
                 break
         return bool(best)
 
-    for gaps in (0, 5, 50):
-        got = {
-            r["doc_id"]
-            for r in pos_index.search_intervals(
-                [t1, t2, t3], max_gaps=gaps, k=None
-            ).collect()
-        }
-        want = {
-            d for d, toks in doc_tokens.items()
-            if ordered_hit(toks, [t1, t2, t3], gaps)
-        }
-        assert got == want, f"gaps={gaps}"
+    for placement in both_placements():
+        for gaps in (0, 5, 50):
+            got = {
+                r["doc_id"]
+                for r in pos_index.search_intervals(
+                    [t1, t2, t3], max_gaps=gaps, k=None
+                ).collect()
+            }
+            want = {
+                d for d, toks in doc_tokens.items()
+                if ordered_hit(toks, [t1, t2, t3], gaps)
+            }
+            assert got == want, f"{placement} gaps={gaps}"
     with pytest.raises(ValueError):
         pos_index.search_intervals([t1], max_gaps=0)
     with pytest.raises(ValueError):
@@ -1257,28 +1261,33 @@ def test_moving_percentiles_vs_numpy(spark):
         )
 
 
-def test_dis_max_fused_parity_with_per_search_combine(index, doc_tokens):
+def test_dis_max_fused_parity_with_per_search_combine(
+    index, doc_tokens, both_placements
+):
     """The fused single-scan dis_max must equal the naive per-subquery
     search + driver combine, in both OR and AND subquery modes."""
-    t1 = _common_term(doc_tokens, 0)
-    t2 = _common_term(doc_tokens, 1)
-    t3 = _common_term(doc_tokens, 2)
-    subs = [[t1, t2], [t3], ["zz_no_such_term"]]
-    for mode in ("or", "and"):
-        got = {
-            r["doc_id"]: r["score"]
-            for r in index.dis_max(subs, tie_breaker=0.4, k=None, mode=mode).collect()
-        }
-        per = [
-            _scores(index.search(q, k=None, mode=mode)) for q in subs
-        ]
-        want = {}
-        for d in set().union(*[set(p) for p in per]):
-            ss = [p[d] for p in per if d in p]
-            want[d] = max(ss) + 0.4 * (sum(ss) - max(ss))
-        assert set(got) == set(want)
-        for d in got:
-            assert math.isclose(got[d], want[d], rel_tol=1e-9), (mode, d)
+    for _ in both_placements():
+        t1 = _common_term(doc_tokens, 0)
+        t2 = _common_term(doc_tokens, 1)
+        t3 = _common_term(doc_tokens, 2)
+        subs = [[t1, t2], [t3], ["zz_no_such_term"]]
+        for mode in ("or", "and"):
+            got = {
+                r["doc_id"]: r["score"]
+                for r in index.dis_max(
+                    subs, tie_breaker=0.4, k=None, mode=mode
+                ).collect()
+            }
+            per = [
+                _scores(index.search(q, k=None, mode=mode)) for q in subs
+            ]
+            want = {}
+            for d in set().union(*[set(p) for p in per]):
+                ss = [p[d] for p in per if d in p]
+                want[d] = max(ss) + 0.4 * (sum(ss) - max(ss))
+            assert set(got) == set(want)
+            for d in got:
+                assert math.isclose(got[d], want[d], rel_tol=1e-9), (mode, d)
 
 
 def test_search_sorted_after_walks_pages(index, corpus, doc_tokens):

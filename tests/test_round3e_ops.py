@@ -703,6 +703,21 @@ def test_pit_snapshot_survives_appends_and_deletes(spark, tmp_path):
     assert not _os.path.exists(pit.pit_dir)
 
 
+def test_pit_handle_has_every_live_attribute(spark, index):
+    """A PIT handle runs the base constructor over its clone, so every
+    instance attribute a freshly opened live handle has exists on it."""
+    live = InvertedIndex(spark, index.index_dir)
+    pit = live.pit()
+    try:
+        assert set(vars(live)) <= set(vars(pit))
+        assert pit.index_dir == pit.pit_dir != live.index_dir
+        assert pit.search(["spark"], k=5).collect() == live.search(
+            ["spark"], k=5
+        ).collect()
+    finally:
+        pit.close()
+
+
 # ---------------------------------------------------------------------------
 # span_multi / collapse inner_hits
 # ---------------------------------------------------------------------------

@@ -83,26 +83,29 @@ def test_span_near_unordered_bruteforce(corpus, pos_index):
         assert got == want and len(want) > 0, (terms, slop)
 
 
-def test_span_near_ordered_equals_intervals(pos_index):
-    a = sorted(
-        r["doc_id"]
-        for r in pos_index.search_span_near(
-            ["the", "join"], slop=3, in_order=True, k=None
-        ).collect()
-    )
-    b = sorted(
-        r["doc_id"]
-        for r in pos_index.search_intervals(["the", "join"], max_gaps=3, k=None).collect()
-    )
-    assert a == b and len(a) > 0
-    # unordered is a superset of ordered
-    c = sorted(
-        r["doc_id"]
-        for r in pos_index.search_span_near(
-            ["the", "join"], slop=3, in_order=False, k=None
-        ).collect()
-    )
-    assert set(a) <= set(c)
+def test_span_near_ordered_equals_intervals(pos_index, both_placements):
+    for _ in both_placements():
+        a = sorted(
+            r["doc_id"]
+            for r in pos_index.search_span_near(
+                ["the", "join"], slop=3, in_order=True, k=None
+            ).collect()
+        )
+        b = sorted(
+            r["doc_id"]
+            for r in pos_index.search_intervals(
+                ["the", "join"], max_gaps=3, k=None
+            ).collect()
+        )
+        assert a == b and len(a) > 0
+        # unordered is a superset of ordered
+        c = sorted(
+            r["doc_id"]
+            for r in pos_index.search_span_near(
+                ["the", "join"], slop=3, in_order=False, k=None
+            ).collect()
+        )
+        assert set(a) <= set(c)
 
 
 def test_span_near_validation(pos_index):

@@ -55,12 +55,12 @@ def test_phrase_groups_matches_manual_composition(pos_index):
     assert got.count() < len(ph_ids)
 
 
-def test_phrase_groups_serving_parity(pos_index):
-    dist = _rows(pos_index.search_phrase(PHRASE, k=None, groups=GROUPS))
-    loc = pos_index.search_phrase_local(PHRASE, k=None, groups=GROUPS)
-    assert [(int(d), pytest.approx(s)) for d, s in loc] == [
-        (d, pytest.approx(s)) for d, s in dist
+def test_phrase_groups_serving_parity(pos_index, both_placements):
+    loc, dist = [
+        _rows(pos_index.search_phrase(PHRASE, k=None, groups=GROUPS))
+        for _ in both_placements()
     ]
+    assert loc == dist and dist
 
 
 def test_phrase_groups_filtered_strategies_rank_identical(pos_index, corpus):

@@ -175,7 +175,7 @@ def test_querystring_boost_parity_with_search(boost_index):
 
 def test_querystring_phrase_boost_through_filtered_path(boost_index):
     idx, docs = boost_index
-    # phrase boost reaches _phrase_prep through the filtered ladder
+    # phrase boost reaches _compile_phrase through the filtered ladder
     via_qs = idx.search_querystring(
         '"spark join"^2 AND doc_id:<=4', docs, k=None
     ).collect()
